@@ -7,11 +7,12 @@ JSON line:
      "builds": {"bm25_index": sec, ...}, "build_total": sec,
      "query_total": sec, "sf": 0.1}
 
-One-time index/cache builds (persisted BM25 index, ANN cell index, doc
-export, reference-fixture cache fill) run in a separate build phase so
-per-query numbers track query latency, not build amortization; ``value``
-stays build_total + query_total, comparable with rounds that charged
-builds to the first query.
+Every one-time fixture (persisted indexes, re-laid-out tables, catalog
+tables, cached frames: the table in ``big_data_assignment2_spark/
+fixtures.py``) is built in a separate build phase so per-query numbers
+track query latency, not build amortization; ``value`` stays
+build_total + query_total, comparable with rounds that charged builds
+to the first query.
 
 Execution is forced with the `noop` sink (full plan runs, nothing collected
 to the driver), which is what a cluster deployment measures too.  A short
@@ -84,120 +85,18 @@ def warm_up(spark, sf_dir: str) -> None:
     )
 
 
-def run_build_phase(spark, sf_dir: str, reg, builds: dict, errors: dict) -> None:
-    """One-time index/fixture builds, timed apart from the queries."""
+def run_build_phase(spark, sf_dir: str, builds: dict, errors: dict) -> None:
+    """One-time fixture builds, timed apart from the queries: every entry
+    of the fixture table, in its build order."""
+    from big_data_assignment2_spark import fixtures
 
-    def _build(label, fn) -> None:
-        _run_isolated(spark, f"build:{label}", fn, builds, errors)
-        if f"build:{label}" in builds:
-            builds[label] = builds.pop(f"build:{label}")
-
-    from big_data_assignment2_spark.operators.search import (
-        ensure_compacted_index,
-        ensure_deleted_index,
-        ensure_incremental_index,
-        ensure_persisted_index,
-    )
-    from big_data_assignment2_spark.operators.multimodal import ensure_image_fixture
-    from big_data_assignment2_spark.operators.similarity import ensure_ann_index
-    from big_data_assignment2_spark.sources.doc_export import ensure_exported
-
-    from big_data_assignment2_spark.sources.text_formats import (
-        write_corrupt_csv,
-        write_events_json,
-        write_lineitem_csv,
-        write_lineitem_orc,
-        write_lineitem_xml,
-    )
-
-    _build("bm25_index", lambda: ensure_persisted_index(spark, sf_dir))
-    _build("bm25_incr_index", lambda: ensure_incremental_index(spark, sf_dir))
-    _build("bm25_deleted_index", lambda: ensure_deleted_index(spark, sf_dir))
-    _build("bm25_compacted_index", lambda: ensure_compacted_index(spark, sf_dir))
-    # the full operability loop (build -> delete -> compact -> append-readd)
-    # as a timed artifact, not just pytest coverage
-    from big_data_assignment2_spark.operators.search import ensure_lifecycle_index
-
-    _build("index_lifecycle_readd", lambda: ensure_lifecycle_index(spark, sf_dir))
-    # the shared connected-components propagation: neardup_components and
-    # dedup_apply_neardup both consume this memoized label frame -- charge
-    # it here so their per-query numbers stop depending on bench order
-    from big_data_assignment2_spark.operators.dedup import _components_labels
-
-    _build("neardup_cc_labels", lambda: _components_labels(spark, sf_dir))
-    _build("ann_index", lambda: ensure_ann_index(spark, sf_dir))
-    _build("image_fixture", lambda: ensure_image_fixture(spark, sf_dir))
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        write_lineitem_range_clustered,
-    )
-
-    _build("range_clustered", lambda: write_lineitem_range_clustered(spark, sf_dir))
-    from big_data_assignment2_spark.sources.manifest import (
-        ensure_append,
-        ensure_manifest,
-    )
-
-    _build("lineitem_manifest", lambda: ensure_manifest(spark, sf_dir))
-    _build("lineitem_manifest_append", lambda: ensure_append(spark, sf_dir))
-    from big_data_assignment2_spark.operators.merge import merged_orders_path
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        write_lineitem_zordered,
-    )
-
-    _build("merge_base_and_merge", lambda: merged_orders_path(spark, sf_dir))
-    _build("zorder_clustered", lambda: write_lineitem_zordered(spark, sf_dir))
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        ensure_compacted_debris,
-    )
-
-    _build("debris_and_compaction", lambda: ensure_compacted_debris(spark, sf_dir))
-    from big_data_assignment2_spark.operators.dedup import _neardup_store
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        write_lineitem_hilbert,
-        write_orders_bloom,
-    )
-    from big_data_assignment2_spark.sources.secondary_index import (
-        build_orders_secondary_index,
-    )
-
-    _build("hilbert_clustered", lambda: write_lineitem_hilbert(spark, sf_dir))
-    _build("orders_bloom", lambda: write_orders_bloom(spark, sf_dir))
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        write_orders_bloom_str,
-    )
-
-    _build("orders_bloom_str", lambda: write_orders_bloom_str(spark, sf_dir))
-    _build("orders_secondary_index", lambda: build_orders_secondary_index(spark, sf_dir))
-    _build("neardup_store", lambda: _neardup_store(spark, sf_dir))
-    from big_data_assignment2_spark.sources.text_formats import write_orders_evolved
-
-    _build("orders_evolved", lambda: write_orders_evolved(spark, sf_dir))
-    _build("doc_export", lambda: ensure_exported(spark, sf_dir))
-    from big_data_assignment2_spark.sources.doc_export import ensure_pyds_written
-
-    _build("pyds_writer_commit", lambda: ensure_pyds_written(spark, sf_dir))
-    from big_data_assignment2_spark.operators.cbo import ensure_stats_tables
-
-    _build("cbo_stats_tables", lambda: ensure_stats_tables(spark, sf_dir))
-    from big_data_assignment2_spark.sources.partitioned_sink import (
-        ensure_bucketed_tables,
-    )
-
-    _build("bucketed_tables", lambda: ensure_bucketed_tables(spark, sf_dir))
-    _build("csv_export", lambda: write_lineitem_csv(spark, sf_dir))
-    _build("json_export", lambda: write_events_json(spark, sf_dir))
-    _build("orc_export", lambda: write_lineitem_orc(spark, sf_dir))
-    _build("corrupt_csv_fixture", lambda: write_corrupt_csv(spark, sf_dir))
-    _build("xml_export", lambda: write_lineitem_xml(spark, sf_dir))
-    from big_data_assignment2_spark.sources.text_formats import write_lineitem_nested
-
-    _build("nested_export", lambda: write_lineitem_nested(spark, sf_dir))
-    if any(n.startswith("reference_bm25") for n in reg.queries):
-        from big_data_assignment2_spark.sources.reference_corpus import (
-            warm_reference_index,
+    for name in fixtures.FIXTURES:
+        label = f"build:{name}"
+        _run_isolated(
+            spark, label, lambda n=name: fixtures.build(spark, sf_dir, n), builds, errors
         )
-
-        _build("reference_cache", lambda: warm_reference_index(spark))
+        if label in builds:
+            builds[name] = builds.pop(label)
 
 
 def main() -> None:
@@ -217,7 +116,7 @@ def main() -> None:
 
     builds: dict[str, float] = {}
     errors: dict[str, str] = {}
-    run_build_phase(spark, sf_dir, reg, builds, errors)
+    run_build_phase(spark, sf_dir, builds, errors)
 
     timings: dict[str, float] = {}
     for name, q in reg.queries.items():

@@ -17,7 +17,7 @@ dimension product. ``tests/test_plans.py`` asserts the reorder happens
 with stats present and does NOT happen with CBO off.
 
 Stats live in the session catalog: the four tables are registered once
-per process as EXTERNAL parquet tables under scratch (explicit
+per session as EXTERNAL parquet tables under scratch (explicit
 ``option("path", ...)`` so the default warehouse dir is never touched)
 and ``ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL COLUMNS`` fills
 row counts + per-column NDV/min/max -- the same operational step a real
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fixtures import fixture
 from ..registry import Registry
 from ..sources.catalog import load_table
 from ._util import sql_dsum
@@ -36,34 +37,29 @@ from ._util import sql_dsum
 CBO_TABLES = ("orders", "customer", "nation", "region")
 PRICE_MIN = 100_000  # fact filter; stats make its selectivity visible
 
-_STATS_READY: dict[str, str] = {}  # sf_dir -> table-name suffix
 
-
-def ensure_stats_tables(spark: SparkSession, sf_dir: str) -> str:
+@fixture("cbo_stats_tables", scratch=True)
+def ensure_stats_tables(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Register the four join tables as external catalog tables with full
-    column statistics, once per process; returns the table-name suffix."""
-    if sf_dir in _STATS_READY:
-        return _STATS_READY[sf_dir]
+    column statistics, once per session; returns the table-name suffix."""
     import re
     import shutil
 
-    from ._util import scratch_root, scratch_slug
+    from ._util import scratch_slug
 
     # table identifiers allow no dots: sanitize the slug (sf0.01 -> sf0_01)
     slug = re.sub(r"[^A-Za-z0-9_]", "_", scratch_slug(sf_dir))
     for t in CBO_TABLES:
         name = f"cbo_{t}_{slug}"
-        path = f"{scratch_root()}/cbo_{t}_{slug}"
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(f"{out}/{t}", ignore_errors=True)
         (
             load_table(spark, sf_dir, t)
             .write.mode("overwrite")
-            .option("path", path)
+            .option("path", f"{out}/{t}")
             .saveAsTable(name)
         )
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-    _STATS_READY[sf_dir] = slug
     return slug
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..functions.hashing import (
     N_MINHASH,
     band_cols,
@@ -90,6 +91,7 @@ WHERE doc_id = keep
 """
 
 
+@fixture("doc_shingles")
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded (doc_id, shingle), stop-shingles removed.
 
@@ -112,29 +114,20 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap (broadcast the Zipf head, shuffle-anti-join the long tail of
     barely-over-cap types, both sides still partial-aggregated).
 
-    Memoized per (session, sf_dir) so ngram-Jaccard, both MinHash paths,
-    and the CC pipeline share ONE materialization. An explicit memo, not
+    A fixture, so ngram-Jaccard, both MinHash paths, and the CC pipeline
+    share ONE materialization. An explicit fixture, not
     cache-manager plan matching: each call builds a fresh ``shingles_pd``
     Python UDF object, and python-UDF expressions compare by function
     identity, so identical-looking plans do NOT match across calls -- the
     r4 bench measured the fast path silently re-running the whole pandas
     shingle pass because of exactly that."""
-    # NOT fanned out, and the memo key records that decision: the
-    # shingle pass is paid once into this cached frame, so what the
-    # downstream consumers actually re-read is the CACHE -- and a
-    # 32-partition cache makes every post-cache stage (band joins,
-    # anti-join, pair aggregation) pay 32x task overhead on a tiny
-    # frame. A memo-keyed A/B (the kill-switch must not be served the
-    # other arm's cached plan) measured the fan-out as a 1.43-1.77x
-    # LOSS across all four consumers, and the fresh-process build-side
-    # comparison is neutral (9.4 vs 8.6s) -- so the single-task shingle
-    # pass stays.
-    import os as _os
-
-    key = (sf_dir, bool(_os.environ.get("SPARK_GRAFT_NO_FANOUT")))
-    hit = _SHINGLES.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    # NOT fanned out: the shingle pass is paid once into this cached
+    # frame, so what the downstream consumers actually re-read is the
+    # CACHE -- and a 32-partition cache makes every post-cache stage (band
+    # joins, anti-join, pair aggregation) pay 32x task overhead on a tiny
+    # frame. An A/B measured the fan-out as a 1.43-1.77x LOSS across all
+    # four consumers, and the fresh-process build-side comparison is
+    # neutral (9.4 vs 8.6s) -- so the single-task shingle pass stays.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = docs.select(
         "doc_id", F.explode(shingles_pd("text", SHINGLE_K)).alias("shingle")
@@ -154,12 +147,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.count()  # materialize the filtered cache off the raw cache
     finally:
         sh.unpersist()  # drop the raw rows even if materialization fails
-    _SHINGLES[key] = (spark, out)
     return out
-
-
-# (session, filtered-shingle frame) per sf_dir -- see _doc_shingles
-_SHINGLES: dict[tuple[str, bool], tuple[SparkSession, DataFrame]] = {}
 
 
 SQL_DOC_SHINGLES = f"""
@@ -548,18 +536,9 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-process memo of the converged label frame: neardup_components and
-# dedup_apply_neardup share one propagation. The creating SparkSession is
-# stored WITH the frame and compared by identity -- a checkpointed frame
-# must never be served to a different session (``id()`` alone can recycle
-# addresses after GC), and a new session simply recomputes.
-_CC_LABELS: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+# neardup_components and dedup_apply_neardup share this one propagation
+@fixture("neardup_cc_labels")
 def _components_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _CC_LABELS.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -598,7 +577,6 @@ def _components_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # large-star/small-star (same per-round primitives, provably
         # logarithmic round count regardless of component diameter)
         labels, _ = _star_components(spark, edges, labels.select("doc_id"))
-    _CC_LABELS[sf_dir] = (spark, labels)
     return labels
 
 
@@ -727,7 +705,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`dedup_apply_neardup`): when two crawls of one page near-dup,
     you keep the cleaner one, not the earlier-numbered one.
 
-    Shape: component labels (shared/memoized propagation) join the
+    Shape: component labels (shared fixture propagation) join the
     quality features, then a two-pass argmax per component -- per-comp
     max(quality) hash-aggregate, equi-join back on (comp, score), then
     min(doc_id) to break exact score ties -- every step a plain
@@ -809,7 +787,7 @@ def neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (how many singletons, pairs, triples, ... the LSH+CC pipeline
     found). THE health metric of a dedup run -- a sudden mass of large
     clusters means the similarity threshold collapsed, a wall of
-    singletons means it's not firing. Shares the memoized converged
+    singletons means it's not firing. Shares the converged
     labels with ``neardup_components`` (no second propagation); two tiny
     aggregates on top."""
     labels = _components_labels(spark, sf_dir)
@@ -909,13 +887,9 @@ WHERE dot / sqrt(CAST(na.n2 * nb.n2 AS DOUBLE)) >= {COSINE_T}
 
 INC_BANDS = N_MINHASH_FAST  # one-row xxhash64 bands; same recall math
 
-# (session, store root) per sf_dir; plus the cached new-batch shingles so
-# repeated calls don't re-run the pandas shingle pass (see _doc_shingles)
-_NEARDUP_STORE: dict[str, tuple[SparkSession, str]] = {}
-_INC_NEW_SH: dict[str, tuple[SparkSession, DataFrame]] = {}
 
-
-def _neardup_store(spark: SparkSession, sf_dir: str) -> str:
+@fixture("neardup_store", scratch=True)
+def _neardup_store(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Persist the near-dup FINGERPRINT STORE for the "existing" corpus
     half (even doc_ids): filtered shingles, one-row LSH band keys, and
     the stop-shingle list. This is the state a production pipeline keeps
@@ -923,12 +897,6 @@ def _neardup_store(spark: SparkSession, sf_dir: str) -> str:
     batch's rows are appended after it is admitted; the stop list is
     refreshed by a df-delta merge exactly like the BM25 vocab in
     ``engine.append_to_index``)."""
-    hit = _NEARDUP_STORE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from ._util import scratch_root, scratch_slug
-
-    root = f"{scratch_root()}/neardup_store_{scratch_slug(sf_dir)}"
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
     sh0 = docs.select(
         "doc_id", F.explode(shingles_pd("text", SHINGLE_K)).alias("shingle")
@@ -960,8 +928,25 @@ def _neardup_store(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(f"{root}/sizes")
     )
-    _NEARDUP_STORE[sf_dir] = (spark, root)
-    return root
+
+
+@fixture("neardup_new_shingles")
+def _new_batch_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The new batch's (odd doc_ids) filtered shingles under the store's
+    stop list, cached so repeated admission checks don't re-run the
+    pandas shingle pass (see :func:`_doc_shingles`)."""
+    new_docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 1)
+    stop = spark.read.parquet(f"{_neardup_store(spark, sf_dir)}/stop")
+    nsh = (
+        new_docs.select(
+            "doc_id", F.explode(shingles_pd("text", SHINGLE_K)).alias("shingle")
+        )
+        .join(F.broadcast(stop), "shingle", "left_anti")
+        .select("doc_id", "shingle")
+        .cache()
+    )
+    nsh.count()  # materialize: the pandas shingle pass must run once
+    return nsh
 
 
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,22 +974,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     J >= {JACCARD_T} pair has probability <= 2^-{INC_BANDS} (same
     argument as ``minhash_lsh_pairs_fast``)."""
     root = _neardup_store(spark, sf_dir)
-    hit = _INC_NEW_SH.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        nsh = hit[1]
-    else:
-        new_docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 1)
-        stop = spark.read.parquet(f"{root}/stop")
-        nsh = (
-            new_docs.select(
-                "doc_id", F.explode(shingles_pd("text", SHINGLE_K)).alias("shingle")
-            )
-            .join(F.broadcast(stop), "shingle", "left_anti")
-            .select("doc_id", "shingle")
-            .cache()
-        )
-        nsh.count()  # materialize: the pandas shingle pass must run once
-        _INC_NEW_SH[sf_dir] = (spark, nsh)
+    nsh = _new_batch_shingles(spark, sf_dir)
     nbanded = _band_rows(
         nsh.groupBy("doc_id").agg(*minhash_cols_fast("shingle", INC_BANDS)), INC_BANDS
     )

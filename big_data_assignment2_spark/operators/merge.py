@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..registry import Registry
 from ..sources.catalog import load_table
 from ._util import dsum, sql_dsum
@@ -48,9 +49,6 @@ def _bucket(key: Column) -> Column:
     return (key % N_BUCKETS).cast("int")
 
 
-_BASE: dict[str, str] = {}
-
-
 def write_base(df: DataFrame, out: str) -> None:
     """Lay out a base table bucket-partitioned by key; one writer task per
     bucket directory (repartition on the partition column first)."""
@@ -61,16 +59,6 @@ def write_base(df: DataFrame, out: str) -> None:
         .partitionBy("bucket")
         .parquet(out)
     )
-
-
-def _write_base(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _BASE:
-        from ._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/orders_merge_base_{scratch_slug(sf_dir)}"
-        write_base(load_table(spark, sf_dir, "orders"), out)
-        _BASE[sf_dir] = out
-    return _BASE[sf_dir]
 
 
 def change_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,17 +153,12 @@ def merge_into(spark: SparkSession, base_path: str, changes: DataFrame) -> list[
     return affected
 
 
-_MERGED: dict[str, str] = {}
-
-
-def merged_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    """Base build + one merge, memoized per process (the mutation must
+@fixture("orders_merged", scratch=True)
+def merged_orders_path(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Base build + one merge, once per session (the mutation must
     apply exactly once)."""
-    if sf_dir not in _MERGED:
-        path = _write_base(spark, sf_dir)
-        merge_into(spark, path, change_set(spark, sf_dir))
-        _MERGED[sf_dir] = path
-    return _MERGED[sf_dir]
+    write_base(load_table(spark, sf_dir, "orders"), out)
+    merge_into(spark, out, change_set(spark, sf_dir))
 
 
 def merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

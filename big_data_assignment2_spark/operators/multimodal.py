@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..registry import Registry
 from ..sources.catalog import load_table
 
@@ -69,20 +70,15 @@ IMG_H = "4 + doc_id % 5"
 # pixel value at (y, x, channel c in RGB order):
 IMG_PIXEL = "(doc_id + 31*y + 7*x + 11*c) % 256"
 
-_IMAGE_FIXTURES: dict[str, str] = {}
 
-
-def ensure_image_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per process) a parquet table of (doc_id, bmp) with real
+@fixture("images", scratch=True)
+def ensure_image_fixture(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Write (once per session) a parquet table of (doc_id, bmp) with real
     encoded BMP bytes per document, under scratch. Encode runs in its own
     Spark job via ``mapInPandas``; the feature query decodes in a later
     job -- the bytes genuinely round-trip through parquet."""
     from ..functions.imaging import bmp_codec
-    from ._util import scratch_root, scratch_slug
 
-    if sf_dir in _IMAGE_FIXTURES:
-        return _IMAGE_FIXTURES[sf_dir]
-    path = f"{scratch_root()}/images_{scratch_slug(sf_dir)}"
     # not fanned out: a 32-file fixture makes every downstream image
     # scan pay per-file open cost that outweighs the parallel encode
     # (fresh-process A/B: features 0.68 -> 0.73s, phash 0.73 -> 0.90s)
@@ -107,9 +103,7 @@ def ensure_image_fixture(spark: SparkSession, sf_dir: str) -> str:
 
     docs.mapInPandas(encode_batches, schema="doc_id bigint, bmp binary").write.mode(
         "overwrite"
-    ).parquet(path)
-    _IMAGE_FIXTURES[sf_dir] = path
-    return path
+    ).parquet(out)
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..functions import bm25
 from ..functions.text import tokenize_query
 from ..registry import Registry
@@ -163,36 +164,14 @@ FROM ranked
     )
 
 
-# In-process memo of built index dirs (never trusted across processes:
-# testdata can be regenerated between driver rounds, so a fresh process
-# always rebuilds rather than reusing on-disk state).
-_BUILT_INDEXES: dict[str, str] = {}
-
-
-def _ensure_index(sf_dir: str, memo: dict[str, str], prefix: str, build) -> str:
-    """Shared once-per-process index-builder scaffold: memo check,
-    scratch-dir naming, build, record. ONE home for the never-trusted-
-    across-processes invariant and the scratch-slug convention (each of
-    the five lifecycle builders below used to carry its own copy)."""
-    from ._util import scratch_root, scratch_slug
-
-    if sf_dir not in memo:
-        index_dir = f"{scratch_root()}/{prefix}_{scratch_slug(sf_dir)}"
-        build(index_dir)
-        memo[sf_dir] = index_dir
-    return memo[sf_dir]
-
-
-def ensure_persisted_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process) and return the persisted index dir for
+@fixture("bm25_index", scratch=True)
+def ensure_persisted_index(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Build (once per session) and return the persisted index dir for
     *sf_dir* -- the one-time ``index.sh`` phase, separated so callers
     (bench.py) can time build and query independently."""
     from .. import engine
 
-    def build(index_dir: str) -> None:
-        engine.build_index(index_build.documents_with_title(spark, sf_dir), index_dir)
-
-    return _ensure_index(sf_dir, _BUILT_INDEXES, "index", build)
+    engine.build_index(index_build.documents_with_title(spark, sf_dir), out)
 
 
 def bm25_search_persisted(
@@ -207,9 +186,6 @@ def bm25_search_persisted(
     from .. import engine
 
     return engine.search(spark, ensure_persisted_index(spark, sf_dir), query, k)
-
-
-_BUILT_INCR: dict[str, str] = {}
 
 
 def bm25_search_incremental(
@@ -231,27 +207,25 @@ def bm25_search_incremental(
     return engine.search(spark, ensure_incremental_index(spark, sf_dir), query, k)
 
 
-def ensure_incremental_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-then-append index dir for *sf_dir*, once per process (the
+@fixture("bm25_index_incr", scratch=True)
+def ensure_incremental_index(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Build-then-append index dir for *sf_dir*, once per session (the
     build half of ``bm25_search_incremental``, split out so bench.py can
     time build and query independently)."""
     from .. import engine
 
-    def build(index_dir: str) -> None:
-        docs = index_build.documents_with_title(spark, sf_dir)
-        # pmod + try_cast + coalesce: every doc lands in exactly one half
-        # (a bare `doc_id % 2` implicit-casts string->double -- NULL for
-        # non-numeric ids, which then match NEITHER side and vanish from
-        # the incremental index while the full-corpus oracle scores them;
-        # Spark's % also keeps the dividend's sign for negatives)
-        even = F.coalesce(
-            F.pmod(F.col("doc_id").try_cast("long"), F.lit(2)) == F.lit(0),
-            F.lit(False),
-        )
-        engine.build_index(docs.where(even), index_dir)
-        engine.append_to_index(docs.where(~even), index_dir)
-
-    return _ensure_index(sf_dir, _BUILT_INCR, "index_incr", build)
+    docs = index_build.documents_with_title(spark, sf_dir)
+    # pmod + try_cast + coalesce: every doc lands in exactly one half
+    # (a bare `doc_id % 2` implicit-casts string->double -- NULL for
+    # non-numeric ids, which then match NEITHER side and vanish from
+    # the incremental index while the full-corpus oracle scores them;
+    # Spark's % also keeps the dividend's sign for negatives)
+    even = F.coalesce(
+        F.pmod(F.col("doc_id").try_cast("long"), F.lit(2)) == F.lit(0),
+        F.lit(False),
+    )
+    engine.build_index(docs.where(even), out)
+    engine.append_to_index(docs.where(~even), out)
 
 
 FILTER_LANG = "en"
@@ -291,80 +265,64 @@ def bm25_search_filtered(
     )
 
 
-_BUILT_DELETED: dict[str, str] = {}
-_BUILT_COMPACTED: dict[str, str] = {}
 DELETE_MOD = 7  # docs with doc_id % 7 == 0 get deleted
 
 
-def ensure_deleted_index(spark: SparkSession, sf_dir: str) -> str:
-    """Clone-then-delete index dir for *sf_dir*, once per process.
+def _clone_and_delete(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
+    """Snapshot the persisted full-corpus index into *out* and delete the
+    ``doc_id % DELETE_MOD == 0`` slice from it; returns the deleted docs.
 
-    The full-corpus build is shared: ``clone_index`` snapshots the
-    persisted index (byte-identical tables, no Spark jobs) and the
-    delete runs against the clone -- the delete path is exercised
-    end-to-end exactly as before, without re-running the whole
-    tokenize/aggregate/write pipeline a second time per fixture."""
+    ``clone_index`` copies the tables byte-identically with no Spark
+    jobs, so each derived fixture exercises its maintenance path
+    end-to-end without re-running the whole tokenize/aggregate/write
+    pipeline a second time."""
     from .. import engine
 
-    def build(index_dir: str) -> None:
-        engine.clone_index(spark, ensure_persisted_index(spark, sf_dir), index_dir)
-        docs = index_build.documents_with_title(spark, sf_dir)
-        engine.delete_from_index(
-            docs.where(F.col("doc_id").cast("long") % DELETE_MOD == 0).select("doc_id"),
-            index_dir,
-        )
-
-    return _ensure_index(sf_dir, _BUILT_DELETED, "index_del", build)
+    engine.clone_index(spark, ensure_persisted_index(spark, sf_dir), out)
+    docs = index_build.documents_with_title(spark, sf_dir)
+    doomed = docs.where(F.col("doc_id").cast("long") % DELETE_MOD == 0)
+    engine.delete_from_index(doomed.select("doc_id"), out)
+    return doomed
 
 
-def ensure_compacted_index(spark: SparkSession, sf_dir: str) -> str:
+@fixture("bm25_index_del", scratch=True)
+def ensure_deleted_index(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Clone-then-delete index dir for *sf_dir*, once per session."""
+    _clone_and_delete(spark, sf_dir, out)
+
+
+@fixture("bm25_index_cpt", scratch=True)
+def ensure_compacted_index(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Clone-then-delete-then-COMPACT index dir for *sf_dir*, once per
-    process. A separate dir from :func:`ensure_deleted_index` -- compaction
+    session. A separate dir from :func:`ensure_deleted_index` -- compaction
     mutates the index in place, and the after-delete query must keep
-    exercising the tombstone-masking search path. The full-corpus build
-    is shared via ``clone_index`` (see :func:`ensure_deleted_index`)."""
+    exercising the tombstone-masking search path."""
     from .. import engine
 
-    def build(index_dir: str) -> None:
-        engine.clone_index(spark, ensure_persisted_index(spark, sf_dir), index_dir)
-        docs = index_build.documents_with_title(spark, sf_dir)
-        engine.delete_from_index(
-            docs.where(F.col("doc_id").cast("long") % DELETE_MOD == 0).select("doc_id"),
-            index_dir,
-        )
-        engine.compact_index(spark, index_dir)
-
-    return _ensure_index(sf_dir, _BUILT_COMPACTED, "index_cpt", build)
+    _clone_and_delete(spark, sf_dir, out)
+    engine.compact_index(spark, out)
 
 
-_BUILT_LIFECYCLE: dict[str, str] = {}
-
-
-def ensure_lifecycle_index(spark: SparkSession, sf_dir: str) -> str:
+@fixture("bm25_index_cycle", scratch=True)
+def ensure_lifecycle_index(spark: SparkSession, sf_dir: str, out: str) -> str:
     """The FULL index operability loop in one timed artifact:
     build -> delete -> compact -> append-READD of the very doc ids the
     delete removed. Compaction purges the dead postings and clears the
     tombstones, so the re-add is legal (``append_to_index`` rejects
     tombstoned ids) and the final searchable state must equal a
     from-scratch index of the full corpus -- asserted in
-    ``tests/test_engine.py``; bench.py registers this as a build so the
+    ``tests/test_engine.py``; bench.py builds this fixture so the
     loop's cost is a per-round artifact, not just pytest coverage.
     Separate dir from :func:`ensure_compacted_index`, whose query relies
     on the deleted docs staying gone. The initial full-corpus build is
-    shared via ``clone_index`` (byte-identical snapshot of the persisted
-    index); the delete -> compact -> append-readd loop -- the part this
-    fixture exists to prove -- still runs in full against the clone."""
+    shared via ``clone_index``; the delete -> compact -> append-readd
+    loop -- the part this fixture exists to prove -- still runs in full
+    against the clone."""
     from .. import engine
 
-    def build(index_dir: str) -> None:
-        engine.clone_index(spark, ensure_persisted_index(spark, sf_dir), index_dir)
-        docs = index_build.documents_with_title(spark, sf_dir)
-        doomed = docs.where(F.col("doc_id").cast("long") % DELETE_MOD == 0)
-        engine.delete_from_index(doomed.select("doc_id"), index_dir)
-        engine.compact_index(spark, index_dir)
-        engine.append_to_index(doomed, index_dir)
-
-    return _ensure_index(sf_dir, _BUILT_LIFECYCLE, "index_cycle", build)
+    doomed = _clone_and_delete(spark, sf_dir, out)
+    engine.compact_index(spark, out)
+    engine.append_to_index(doomed, out)
 
 
 def bm25_search_after_delete(

@@ -34,6 +34,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..functions.vectors import SQL_DOT, cosine, dot, sql_cosine
 from ..registry import Registry
 from ..sources.catalog import load_table
@@ -484,20 +485,11 @@ def build_ann_index(emb: DataFrame, index_dir: str) -> None:
     meta.write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
 
-_BUILT_ANN: dict[str, str] = {}  # in-process memo, never trusted across runs
-
-
-def ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process) and return the cell-partitioned ANN index
+@fixture("ann_index", scratch=True)
+def ensure_ann_index(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Build (once per session) and return the cell-partitioned ANN index
     dir -- separated from the query so bench.py times build vs search."""
-    from .search import _ensure_index
-
-    return _ensure_index(
-        sf_dir,
-        _BUILT_ANN,
-        "ann",
-        lambda d: build_ann_index(load_table(spark, sf_dir, "embeddings"), d),
-    )
+    build_ann_index(load_table(spark, sf_dir, "embeddings"), out)
 
 
 def ann_topk_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fixtures import fixture
 from ..registry import Registry
 from ..sources.catalog import load_table
 from ._util import sql_dsum
@@ -69,9 +70,7 @@ FROM walk GROUP BY depth
 """
 
 
-_UDF_READY: set[int] = set()  # id(spark) of sessions with the functions
-
-
+@fixture("sql_udfs")
 def _ensure_sql_udfs(spark: SparkSession) -> None:
     """Declare the SQL-body scalar functions once per session: the
     reference's inline revenue arithmetic (``disc_price``/``charged``)
@@ -80,8 +79,6 @@ def _ensure_sql_udfs(spark: SparkSession) -> None:
     the calling plan -- whole-stage codegen, no Python boundary, unlike
     a ``spark.udf.register`` lambda doing the same arithmetic ~100x
     slower at scale."""
-    if id(spark) in _UDF_READY:
-        return
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1 - d)"
@@ -90,7 +87,6 @@ def _ensure_sql_udfs(spark: SparkSession) -> None:
         "CREATE OR REPLACE TEMPORARY FUNCTION charged(p DOUBLE, d DOUBLE, t DOUBLE) "
         "RETURNS DOUBLE RETURN disc_price(p, d) * (1 + t)"
     )
-    _UDF_READY.add(id(spark))
 
 
 SQLUDF_VIEW = "lineitem_udf_v"

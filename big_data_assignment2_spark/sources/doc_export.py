@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..functions.text import SQL_CLEAN_TEXT, clean_text, safe_filename
 from ..operators.index_build import documents_with_title
 from ..registry import Registry
@@ -49,22 +50,14 @@ def export_documents(docs: DataFrame, out_dir: str) -> None:
     rows.foreachPartition(write_partition)
 
 
-_EXPORTED: dict[str, str] = {}  # in-process memo of completed exports
-
-
-def ensure_exported(spark: SparkSession, sf_dir: str) -> str:
-    """Run the export (once per process) and return its directory --
+@fixture("doc_export", scratch=True)
+def ensure_exported(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Run the export (once per session) and return its directory --
     separated from the read-back so bench.py times write vs read."""
     import shutil
 
-    from ..operators._util import scratch_root, scratch_slug
-
-    if sf_dir not in _EXPORTED:
-        out_dir = f"{scratch_root()}/docs_{scratch_slug(sf_dir)}"
-        shutil.rmtree(out_dir, ignore_errors=True)  # no stale files from prior runs
-        export_documents(documents_with_title(spark, sf_dir), out_dir)
-        _EXPORTED[sf_dir] = out_dir
-    return _EXPORTED[sf_dir]
+    shutil.rmtree(out, ignore_errors=True)  # no stale files from prior runs
+    export_documents(documents_with_title(spark, sf_dir), out)
 
 
 def doc_file_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,8 +223,6 @@ def python_datasource_textdir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Python Data Source WRITER: the other half of the connector API ---
 
-_PYDS_WRITTEN: dict[str, str] = {}  # in-process memo of committed writes
-
 
 def _register_textdirio(spark: SparkSession):
     """Define + register the bidirectional ``textdirio`` Python Data
@@ -365,35 +356,23 @@ def _register_textdirio(spark: SparkSession):
     spark.dataSource.register(_TextDirIO)
 
 
-def ensure_pyds_written(spark: SparkSession, sf_dir: str) -> str:
+@fixture("pyds_docs", scratch=True)
+def ensure_pyds_written(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write the per-doc corpus through the ``textdirio`` WRITER (once
-    per process; bench charges this to the build phase) and return the
+    per session; bench charges this to the build phase) and return the
     committed directory."""
-    import os as _os
+    import shutil
 
-    from ..operators._util import scratch_root, scratch_slug
-
-    if sf_dir not in _PYDS_WRITTEN:
-        import shutil
-
-        out_dir = f"{scratch_root()}/pyds_docs_{scratch_slug(sf_dir)}"
-        shutil.rmtree(out_dir, ignore_errors=True)
-        _os.makedirs(out_dir, exist_ok=True)
-        _register_textdirio(spark)
-        rows = documents_with_title(spark, sf_dir).select(
-            F.concat(
-                F.col("doc_id"), F.lit("_"), safe_filename("title"), F.lit(".txt")
-            ).alias("filename"),
-            clean_text("text").alias("content"),
-        )
-        (
-            rows.write.format("textdirio")
-            .mode("overwrite")
-            .option("path", out_dir)
-            .save()
-        )
-        _PYDS_WRITTEN[sf_dir] = out_dir
-    return _PYDS_WRITTEN[sf_dir]
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    _register_textdirio(spark)
+    rows = documents_with_title(spark, sf_dir).select(
+        F.concat(
+            F.col("doc_id"), F.lit("_"), safe_filename("title"), F.lit(".txt")
+        ).alias("filename"),
+        clean_text("text").alias("content"),
+    )
+    rows.write.format("textdirio").mode("overwrite").option("path", out).save()
 
 
 def python_datasource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

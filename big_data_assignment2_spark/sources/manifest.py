@@ -40,6 +40,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..operators._util import dsum, ntz_lit, sql_dsum
 from ..registry import Registry
 from .catalog import load_table
@@ -49,9 +50,6 @@ MANIFEST_SCHEMA = (
     "file_path string, n_rows long, n_row_groups long, "
     "ship_min_us long, ship_max_us long"
 )
-
-# manifest rows per (sf_dir): tiny -- one row per data file
-_MANIFEST: dict[str, list[dict]] = {}
 
 
 def _iso_us(iso: str) -> int:
@@ -118,14 +116,13 @@ def manifest_over_dir(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+@fixture("lineitem_manifest")
 def ensure_manifest(spark: SparkSession, sf_dir: str) -> list[dict]:
-    """Collected manifest rows, memoized per (process, sf_dir). The
-    collect is bounded by the FILE count (8 here; a manifest is small by
-    construction -- that is its entire point), mirroring how a real scan
-    planner holds manifests driver-side."""
-    if sf_dir not in _MANIFEST:
-        _MANIFEST[sf_dir] = [r.asDict() for r in build_manifest(spark, sf_dir).collect()]
-    return _MANIFEST[sf_dir]
+    """Collected manifest rows, one per data file. The collect is bounded
+    by the FILE count (8 here; a manifest is small by construction --
+    that is its entire point), mirroring how a real scan planner holds
+    manifests driver-side."""
+    return [r.asDict() for r in build_manifest(spark, sf_dir).collect()]
 
 
 def _plan(man: list[dict], lo_iso: str, hi_iso: str) -> list[str]:
@@ -200,8 +197,6 @@ GROUP BY l_returnflag, l_linestatus
 APPEND_SHIFT_DAYS = 7400  # any disjoint shift works; ~20y keeps it obvious
 APPEND_LO, APPEND_HI = RANGE_LO, "1995-04-01"
 
-_APPEND: dict[str, tuple[str, list[dict]]] = {}
-
 
 def _shift_iso(iso: str) -> str:
     from datetime import timedelta
@@ -211,29 +206,24 @@ def _shift_iso(iso: str) -> str:
     )
 
 
-def ensure_append(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:
-    """Write (once per process) the late-arriving file + its manifest
+@fixture("lineitem_late", scratch=True)
+def ensure_append(spark: SparkSession, sf_dir: str, out: str) -> tuple[str, list[dict]]:
+    """Write (once per session) the late-arriving file + its manifest
     rows. Full lineitem schema (so multi-path reads need no schema
     merging); one output file (it IS the unit of commit here)."""
-    if sf_dir not in _APPEND:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_late_{scratch_slug(sf_dir)}"
-        late = (
-            load_table(spark, sf_dir, "lineitem")
-            .where(
-                (F.col("l_shipdate") >= ntz_lit(APPEND_LO))
-                & (F.col("l_shipdate") < ntz_lit(APPEND_HI))
-            )
-            .withColumn(
-                "l_shipdate",
-                F.col("l_shipdate") + F.expr(f"INTERVAL {APPEND_SHIFT_DAYS} DAYS"),
-            )
+    late = (
+        load_table(spark, sf_dir, "lineitem")
+        .where(
+            (F.col("l_shipdate") >= ntz_lit(APPEND_LO))
+            & (F.col("l_shipdate") < ntz_lit(APPEND_HI))
         )
-        late.coalesce(1).write.mode("overwrite").parquet(out)
-        rows = [r.asDict() for r in manifest_over_dir(spark, out).collect()]
-        _APPEND[sf_dir] = (out, rows)
-    return _APPEND[sf_dir]
+        .withColumn(
+            "l_shipdate",
+            F.col("l_shipdate") + F.expr(f"INTERVAL {APPEND_SHIFT_DAYS} DAYS"),
+        )
+    )
+    late.coalesce(1).write.mode("overwrite").parquet(out)
+    return out, [r.asDict() for r in manifest_over_dir(spark, out).collect()]
 
 
 def manifest_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,7 +7,7 @@ partitioned by a low-cardinality, filter-frequent column (here
 the other partitions' files, which beats any row-group filter.
 
 The registered query round-trips: write events partitioned by
-``event_type`` into a scratch warehouse once per process, read it back
+``event_type`` into a scratch warehouse once per session, read it back
 with a partition filter + aggregate. Its oracle is the same aggregate
 over the ORIGINAL table, so the round-trip (write -> discover ->
 prune -> read) is value-hash-verified. ``tests/test_plans.py`` asserts
@@ -26,29 +26,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..operators._util import dsum, sql_davg, sql_dsum
 from ..registry import Registry
 from ..sources.catalog import load_table
 
-_WRITTEN: dict[str, str] = {}
 
-
-def write_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
-    """Write events partitioned by event_type; memoized per sf_dir."""
-    if sf_dir not in _WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/events_by_type_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "events")
-            # one writer task per partition value: no small-files explosion
-            .repartition(F.col("event_type"))
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(out)
-        )
-        _WRITTEN[sf_dir] = out
-    return _WRITTEN[sf_dir]
+@fixture("events_by_type", scratch=True)
+def write_events_partitioned(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Write events partitioned by event_type."""
+    (
+        load_table(spark, sf_dir, "events")
+        # one writer task per partition value: no small-files explosion
+        .repartition(F.col("event_type"))
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(out)
+    )
 
 
 def read_events_pruned(spark: SparkSession, sf_dir: str, event_type: str = "purchase") -> DataFrame:
@@ -78,10 +72,8 @@ GROUP BY user_id
 RANGE_FILES = 8  # range-cluster lineitem into 8 shipdate-ordered files
 
 
-_RANGE_WRITTEN: dict[str, str] = {}
-
-
-def write_lineitem_range_clustered(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_by_shipdate", scratch=True)
+def write_lineitem_range_clustered(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Range-clustered layout: ``repartitionByRange`` on ``l_shipdate`` +
     ``sortWithinPartitions`` before the write, so each output file covers
     a DISJOINT shipdate interval (asserted from the parquet footers in
@@ -91,19 +83,13 @@ def write_lineitem_range_clustered(spark: SparkSession, sf_dir: str) -> str:
     overlap it via plain parquet statistics -- at 100 TB, time-range
     scans touch days, not the table. (Boundaries come from Spark's range
     sampling; results never depend on where they land.)"""
-    if sf_dir not in _RANGE_WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_by_shipdate_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .repartitionByRange(RANGE_FILES, F.col("l_shipdate"))
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _RANGE_WRITTEN[sf_dir] = out
-    return _RANGE_WRITTEN[sf_dir]
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .repartitionByRange(RANGE_FILES, F.col("l_shipdate"))
+        .sortWithinPartitions("l_shipdate")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 RANGE_LO, RANGE_HI = "1995-01-01", "1996-01-01"
@@ -139,30 +125,24 @@ GROUP BY l_returnflag
 ZORDER_FILES = 32
 ZBITS = 16
 
-_ZORDER_WRITTEN: dict[str, str] = {}
-
-# (pmin, pmax, smin, smax) of lineitem's (l_partkey, l_suppkey), memoized
-# per (process, sf_dir): the zorder/hilbert writers AND their registered
-# box predicates all need the identical 4-value bounds, and re-running the
-# full-table min/max agg on every query invocation paid a redundant
-# lineitem scan per call (warm bench reps included).
-_PK_SK_BOUNDS: dict[str, tuple[int, int, int, int]] = {}
-
-
+# (pmin, pmax, smin, smax) of lineitem's (l_partkey, l_suppkey): the
+# zorder/hilbert writers AND their registered box predicates all need the
+# identical 4-value bounds, and re-running the full-table min/max agg on
+# every query invocation paid a redundant lineitem scan per call (warm
+# bench reps included).
+@fixture("pk_sk_bounds")
 def _pk_sk_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
-    if sf_dir not in _PK_SK_BOUNDS:
-        b = (
-            load_table(spark, sf_dir, "lineitem")
-            .agg(
-                F.min("l_partkey"),
-                F.max("l_partkey"),
-                F.min("l_suppkey"),
-                F.max("l_suppkey"),
-            )
-            .collect()[0]
+    b = (
+        load_table(spark, sf_dir, "lineitem")
+        .agg(
+            F.min("l_partkey"),
+            F.max("l_partkey"),
+            F.min("l_suppkey"),
+            F.max("l_suppkey"),
         )
-        _PK_SK_BOUNDS[sf_dir] = tuple(int(v) for v in b)
-    return _PK_SK_BOUNDS[sf_dir]
+        .collect()[0]
+    )
+    return tuple(int(v) for v in b)
 
 
 def _zvalue(sx, sy):
@@ -178,7 +158,8 @@ def _zvalue(sx, sy):
     return z
 
 
-def write_lineitem_zordered(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_zorder", scratch=True)
+def write_lineitem_zordered(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Z-order (Morton-curve) clustered layout on ``(l_partkey,
     l_suppkey)``: both keys are min-max scaled to 16 bits, bit-interleaved
     into a single z-value, and the table is range-clustered on that value
@@ -194,29 +175,23 @@ def write_lineitem_zordered(spark: SparkSession, sf_dir: str) -> str:
     of Column algebra. tests/test_bucketing.py asserts per-file boxes are
     genuinely 2-D-local (both spans bounded), which 1-D clustering cannot
     produce. The z-value is layout-only -- results never depend on it."""
-    if sf_dir not in _ZORDER_WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_zorder_{scratch_slug(sf_dir)}"
-        li = load_table(spark, sf_dir, "lineitem")
-        pmin, pmax, smin, smax = _pk_sk_bounds(spark, sf_dir)
-        scale = (1 << ZBITS) - 1
-        sx = (
-            (F.col("l_partkey") - pmin) * scale / F.lit(max(pmax - pmin, 1))
-        ).cast("long")
-        sy = (
-            (F.col("l_suppkey") - smin) * scale / F.lit(max(smax - smin, 1))
-        ).cast("long")
-        (
-            li.withColumn("_z", _zvalue(sx, sy))
-            .repartitionByRange(ZORDER_FILES, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _ZORDER_WRITTEN[sf_dir] = out
-    return _ZORDER_WRITTEN[sf_dir]
+    li = load_table(spark, sf_dir, "lineitem")
+    pmin, pmax, smin, smax = _pk_sk_bounds(spark, sf_dir)
+    scale = (1 << ZBITS) - 1
+    sx = (
+        (F.col("l_partkey") - pmin) * scale / F.lit(max(pmax - pmin, 1))
+    ).cast("long")
+    sy = (
+        (F.col("l_suppkey") - smin) * scale / F.lit(max(smax - smin, 1))
+    ).cast("long")
+    (
+        li.withColumn("_z", _zvalue(sx, sy))
+        .repartitionByRange(ZORDER_FILES, F.col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def _zorder_box(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
@@ -270,8 +245,6 @@ GROUP BY l_returnflag
 
 HILBERT_BITS = 8  # 256 x 256 grid -- plenty of resolution for ~32 files
 HILBERT_FILES = 32
-
-_HILBERT_WRITTEN: dict[str, str] = {}
 
 
 def _with_hilbert(df: DataFrame, sx, sy, out: str) -> DataFrame:
@@ -335,31 +308,26 @@ def _with_hilbert(df: DataFrame, sx, sy, out: str) -> DataFrame:
     return df.drop(x, y)
 
 
-def write_lineitem_hilbert(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_hilbert", scratch=True)
+def write_lineitem_hilbert(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Hilbert-curve clustered layout on ``(l_partkey, l_suppkey)``: both
     keys min-max scaled to HILBERT_BITS bits, mapped through the curve
     index, and range-clustered on it -- same write shape as the Morton
     layout, different (continuous) space-filling curve. The curve value
     is layout-only; results never depend on it."""
-    if sf_dir not in _HILBERT_WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_hilbert_{scratch_slug(sf_dir)}"
-        li = load_table(spark, sf_dir, "lineitem")
-        pmin, pmax, smin, smax = _pk_sk_bounds(spark, sf_dir)
-        scale = (1 << HILBERT_BITS) - 1
-        sx = ((F.col("l_partkey") - pmin) * scale / F.lit(max(pmax - pmin, 1))).cast("long")
-        sy = ((F.col("l_suppkey") - smin) * scale / F.lit(max(smax - smin, 1))).cast("long")
-        (
-            _with_hilbert(li, sx, sy, "_h")
-            .repartitionByRange(HILBERT_FILES, F.col("_h"))
-            .sortWithinPartitions("_h")
-            .drop("_h")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _HILBERT_WRITTEN[sf_dir] = out
-    return _HILBERT_WRITTEN[sf_dir]
+    li = load_table(spark, sf_dir, "lineitem")
+    pmin, pmax, smin, smax = _pk_sk_bounds(spark, sf_dir)
+    scale = (1 << HILBERT_BITS) - 1
+    sx = ((F.col("l_partkey") - pmin) * scale / F.lit(max(pmax - pmin, 1))).cast("long")
+    sy = ((F.col("l_suppkey") - smin) * scale / F.lit(max(smax - smin, 1))).cast("long")
+    (
+        _with_hilbert(li, sx, sy, "_h")
+        .repartitionByRange(HILBERT_FILES, F.col("_h"))
+        .sortWithinPartitions("_h")
+        .drop("_h")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def _hilbert_box(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
@@ -415,10 +383,9 @@ BLOOM_FILES = 8  # orders clustered by DATE -> orderkey scattered everywhere
 BLOOM_NDV = 200_000  # expected distinct orderkeys per row group (upper bound)
 BLOOM_TOPK = 5  # point-fetch the keys of the 5 priciest orders
 
-_BLOOM_WRITTEN: dict[str, str] = {}
 
-
-def write_orders_bloom(spark: SparkSession, sf_dir: str) -> str:
+@fixture("orders_bloom", scratch=True)
+def write_orders_bloom(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write orders clustered by ``o_orderdate`` with a PARQUET BLOOM
     FILTER on ``o_orderkey`` -- the skipping index for the case min/max
     stats fundamentally cannot handle: a point lookup on a column
@@ -436,21 +403,15 @@ def write_orders_bloom(spark: SparkSession, sf_dir: str) -> str:
     everywhere, bloom hits only where the key really lives. Note
     parquet-mr only writes a bloom for column chunks that are not fully
     dictionary-encoded (a dictionary already answers exact membership)."""
-    if sf_dir not in _BLOOM_WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/orders_bloom_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "orders")
-            .repartitionByRange(BLOOM_FILES, F.col("o_orderdate"))
-            .sortWithinPartitions("o_orderdate")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#o_orderkey", "true")
-            .option("parquet.bloom.filter.expected.ndv#o_orderkey", str(BLOOM_NDV))
-            .parquet(out)
-        )
-        _BLOOM_WRITTEN[sf_dir] = out
-    return _BLOOM_WRITTEN[sf_dir]
+    (
+        load_table(spark, sf_dir, "orders")
+        .repartitionByRange(BLOOM_FILES, F.col("o_orderdate"))
+        .sortWithinPartitions("o_orderdate")
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#o_orderkey", "true")
+        .option("parquet.bloom.filter.expected.ndv#o_orderkey", str(BLOOM_NDV))
+        .parquet(out)
+    )
 
 
 def parquet_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,8 +456,6 @@ FROM orders JOIN top USING (o_orderkey)
 
 # --- string-key bloom: the Binary path ---
 
-_BLOOM_STR_WRITTEN: dict[str, str] = {}
-
 
 def _o_ref(col):
     """External-reference string for an order: the UUID/URL/doc-id shape
@@ -504,7 +463,8 @@ def _o_ref(col):
     return F.concat(F.lit("ORD-"), F.lpad(col.cast("string"), 10, "0"))
 
 
-def write_orders_bloom_str(spark: SparkSession, sf_dir: str) -> str:
+@fixture("orders_bloom_str", scratch=True)
+def write_orders_bloom_str(spark: SparkSession, sf_dir: str, out: str) -> str:
     """The string-key twin of :func:`write_orders_bloom`: orders carry a
     derived reference string ``o_ref`` (``ORD-<orderkey>``), the layout
     is date-clustered, and a parquet bloom is written on ``o_ref``.
@@ -519,23 +479,17 @@ def write_orders_bloom_str(spark: SparkSession, sf_dir: str) -> str:
     overflow the dictionary page and fall back to plain encoding, but this
     sf's ~15k short strings would still fit, so the column opts out to
     reproduce the encoding the bloom exists for."""
-    if sf_dir not in _BLOOM_STR_WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/orders_bloom_str_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "orders")
-            .withColumn("o_ref", _o_ref(F.col("o_orderkey")))
-            .repartitionByRange(BLOOM_FILES, F.col("o_orderdate"))
-            .sortWithinPartitions("o_orderdate")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#o_ref", "true")
-            .option("parquet.bloom.filter.expected.ndv#o_ref", str(BLOOM_NDV))
-            .option("parquet.enable.dictionary#o_ref", "false")
-            .parquet(out)
-        )
-        _BLOOM_STR_WRITTEN[sf_dir] = out
-    return _BLOOM_STR_WRITTEN[sf_dir]
+    (
+        load_table(spark, sf_dir, "orders")
+        .withColumn("o_ref", _o_ref(F.col("o_orderkey")))
+        .repartitionByRange(BLOOM_FILES, F.col("o_orderdate"))
+        .sortWithinPartitions("o_orderdate")
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#o_ref", "true")
+        .option("parquet.bloom.filter.expected.ndv#o_ref", str(BLOOM_NDV))
+        .option("parquet.enable.dictionary#o_ref", "false")
+        .parquet(out)
+    )
 
 
 def parquet_bloom_skipping_str(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,12 +594,12 @@ GROUP BY e.event_type
 # --- bucketed tables: the co-located-join layout ---
 
 N_BUCKETS = 8
-_BUCKETED_READY: dict[str, str] = {}
 
 
-def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
+@fixture("bucketed_tables", scratch=True)
+def ensure_bucketed_tables(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Save ``orders`` and ``customer`` as catalog tables BUCKETED by the
-    join key (``bucketBy(8, custkey)`` + ``sortBy``), once per process;
+    join key (``bucketBy(8, custkey)`` + ``sortBy``), once per session;
     returns the table-name suffix.
 
     Bucketing is THE pre-paid shuffle: both tables hash-partition into the
@@ -655,29 +609,25 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     from the dominant shuffle into a map-side merge. ``repartition`` on
     the key before the write keeps it to ONE file per bucket, which also
     lets the read side trust per-bucket sort order."""
-    if sf_dir in _BUCKETED_READY:
-        return _BUCKETED_READY[sf_dir]
     import re
     import shutil
 
-    from ..operators._util import scratch_root, scratch_slug
+    from ..operators._util import scratch_slug
 
     slug = re.sub(r"[^A-Za-z0-9_]", "_", scratch_slug(sf_dir))
     for t, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         name = f"bkt_{t}_{slug}"
-        path = f"{scratch_root()}/bkt_{t}_{slug}"
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(f"{out}/{t}", ignore_errors=True)
         (
             load_table(spark, sf_dir, t)
             .repartition(N_BUCKETS, F.col(key))
             .write.mode("overwrite")
-            .option("path", path)
+            .option("path", f"{out}/{t}")
             .bucketBy(N_BUCKETS, key)
             .sortBy(key)
             .saveAsTable(name)
         )
-    _BUCKETED_READY[sf_dir] = slug
     return slug
 
 
@@ -959,25 +909,17 @@ def compact_table_files(spark: SparkSession, path: str, target_bytes: int) -> in
     return n_out
 
 
-_DEBRIS_COMPACTED: dict[str, str] = {}
-
-
-def ensure_compacted_debris(spark: SparkSession, sf_dir: str) -> str:
+@fixture("events_debris", scratch=True)
+def ensure_compacted_debris(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write events as DEBRIS_FILES tiny fragments, then compact them to
-    the byte-target; memoized per process."""
-    if sf_dir not in _DEBRIS_COMPACTED:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/events_debris_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "events")
-            .repartition(DEBRIS_FILES)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        compact_table_files(spark, out, COMPACT_TARGET_BYTES)
-        _DEBRIS_COMPACTED[sf_dir] = out
-    return _DEBRIS_COMPACTED[sf_dir]
+    the byte-target."""
+    (
+        load_table(spark, sf_dir, "events")
+        .repartition(DEBRIS_FILES)
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    compact_table_files(spark, out, COMPACT_TARGET_BYTES)
 
 
 SQL_SMALL_FILES = f"""

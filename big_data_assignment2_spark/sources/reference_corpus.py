@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..operators.index_build import (
     doc_stats_from_docs,
     inverted_from_docs,
@@ -58,43 +59,27 @@ def load_reference_corpus(
     )
 
 
-# Per-process memo of the (cached) index frames: the fixture corpus is
-# immutable, and the three smoke queries share one index build. Keyed by
-# (application id, data_dir) -- unlike the path-keyed memos elsewhere
-# (which store paths and re-read via the caller's session), this one
-# stores DataFrames BOUND to the session that built them: after a
-# spark.stop(), a fresh session must rebuild, not inherit frames whose
-# plans reference the dead JVM state.
-_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
-def _reference_index(spark: SparkSession, data_dir: str):
-    key = (spark.sparkContext.applicationId, data_dir)
-    if key not in _INDEX_CACHE:
-        # persist docs too: inverted and stats each scan the corpus, and
-        # the 1000-small-file wholetext read costs more than the cache.
-        # coalesce first: wholetext yields ~1 partition per file, and a
-        # 1000-partition cache makes every downstream op pay 1000 tasks
-        # of scheduling for 1000 rows -- the classic small-files problem,
-        # answered the same way an ingest pipeline would (compact once,
-        # then operate on sane partitions).
-        docs = load_reference_corpus(spark, data_dir).coalesce(8).persist()
-        inverted = inverted_from_docs(docs).persist()
-        vocab = vocab_from_inverted(inverted).persist()
-        stats = doc_stats_from_docs(docs).persist()
-        _INDEX_CACHE[key] = (inverted, vocab, stats)
-    return _INDEX_CACHE[key]
-
-
-def warm_reference_index(
-    spark: SparkSession, data_dir: str = REFERENCE_DATA_DIR
-) -> None:
-    """Force-materialize the cached fixture index (the 1000-small-file
-    wholetext read + three persists) so bench.py can charge the one-time
-    cache fill to a build phase instead of the first smoke query."""
-    inverted, vocab, stats = _reference_index(spark, data_dir)
+@fixture("reference_index")
+def _reference_index(spark: SparkSession, data_dir: str = REFERENCE_DATA_DIR):
+    """Cached (inverted, vocab, doc_stats) over the immutable corpus at
+    *data_dir*, shared by the three smoke queries; None when that corpus
+    is not checked out (its smoke queries are then not registered)."""
+    if not os.path.isdir(data_dir):
+        return None
+    # persist docs too: inverted and stats each scan the corpus, and
+    # the 1000-small-file wholetext read costs more than the cache.
+    # coalesce first: wholetext yields ~1 partition per file, and a
+    # 1000-partition cache makes every downstream op pay 1000 tasks
+    # of scheduling for 1000 rows -- the classic small-files problem,
+    # answered the same way an ingest pipeline would (compact once,
+    # then operate on sane partitions).
+    docs = load_reference_corpus(spark, data_dir).coalesce(8).persist()
+    inverted = inverted_from_docs(docs).persist()
+    vocab = vocab_from_inverted(inverted).persist()
+    stats = doc_stats_from_docs(docs).persist()
     for df in (inverted, vocab, stats):
         df.count()
+    return inverted, vocab, stats
 
 
 def reference_search(

@@ -38,43 +38,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..registry import Registry
 from ..sources.catalog import load_table
 
 PRIMARY_FILES = 16  # orders clustered by o_orderkey
 INDEX_FILES = 4  # secondary index clustered by o_custkey
 
-_BUILT: dict[str, tuple[str, str]] = {}
 
-
-def build_orders_secondary_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write the primary layout and its secondary index; memoized per
-    sf_dir. Writing both in the same pass is the maintenance story: on an
+@fixture("orders_secondary_index", scratch=True)
+def build_orders_secondary_index(
+    spark: SparkSession, sf_dir: str, out: str
+) -> tuple[str, str]:
+    """Write the primary layout and its secondary index; returns their
+    paths. Writing both in the same pass is the maintenance story: on an
     append-only table the index is just one more (value, key) projection
     written per ingest batch; on rewrite (compaction) it is rebuilt with
     the partition it covers."""
-    if sf_dir not in _BUILT:
-        from ..operators._util import scratch_root, scratch_slug
-
-        slug = scratch_slug(sf_dir)
-        primary = f"{scratch_root()}/orders_by_okey_{slug}"
-        index = f"{scratch_root()}/orders_custkey_idx_{slug}"
-        orders = load_table(spark, sf_dir, "orders")
-        (
-            orders.repartitionByRange(PRIMARY_FILES, F.col("o_orderkey"))
-            .sortWithinPartitions("o_orderkey")
-            .write.mode("overwrite")
-            .parquet(primary)
-        )
-        (
-            orders.select("o_custkey", "o_orderkey")
-            .repartitionByRange(INDEX_FILES, F.col("o_custkey"))
-            .sortWithinPartitions("o_custkey", "o_orderkey")
-            .write.mode("overwrite")
-            .parquet(index)
-        )
-        _BUILT[sf_dir] = (primary, index)
-    return _BUILT[sf_dir]
+    primary, index = f"{out}/orders_by_okey", f"{out}/orders_custkey_idx"
+    orders = load_table(spark, sf_dir, "orders")
+    (
+        orders.repartitionByRange(PRIMARY_FILES, F.col("o_orderkey"))
+        .sortWithinPartitions("o_orderkey")
+        .write.mode("overwrite")
+        .parquet(primary)
+    )
+    (
+        orders.select("o_custkey", "o_orderkey")
+        .repartitionByRange(INDEX_FILES, F.col("o_custkey"))
+        .sortWithinPartitions("o_custkey", "o_orderkey")
+        .write.mode("overwrite")
+        .parquet(index)
+    )
+    return primary, index
 
 
 def secondary_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,11 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from ..operators._util import dsum, sql_dsum
 from ..registry import Registry
 from ..sources.catalog import load_table
-
-_WRITTEN: dict[str, str] = {}
 
 CSV_SCHEMA = (
     "l_orderkey bigint, l_linenumber int, l_quantity double,"
@@ -42,29 +41,24 @@ CSV_SCHEMA = (
 )
 
 
-def write_lineitem_csv(spark: SparkSession, sf_dir: str) -> str:
-    """Write a lineitem projection as headered CSV; memoized per sf_dir."""
-    if sf_dir not in _WRITTEN:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_csv_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                "l_orderkey",
-                "l_linenumber",
-                "l_quantity",
-                "l_extendedprice",
-                "l_returnflag",
-                F.date_format("l_shipdate", "yyyy-MM-dd'T'HH:mm:ss").alias("l_shipdate"),
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .csv(out)
+@fixture("lineitem_csv", scratch=True)
+def write_lineitem_csv(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Write a lineitem projection as headered CSV."""
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_quantity",
+            "l_extendedprice",
+            "l_returnflag",
+            F.date_format("l_shipdate", "yyyy-MM-dd'T'HH:mm:ss").alias("l_shipdate"),
         )
-        _WRITTEN[sf_dir] = out
-    return _WRITTEN[sf_dir]
+        .repartition(4)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(out)
+    )
 
 
 def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,43 +95,35 @@ GROUP BY 1
 """
 
 
-_WRITTEN_JSON: dict[str, str] = {}
-_WRITTEN_ORC: dict[str, str] = {}
-
 JSON_SCHEMA = (
     "event_id bigint, ts_us bigint, user_id bigint,"
     " event_type string, value double, props string"
 )
 
 
-def write_events_json(spark: SparkSession, sf_dir: str) -> str:
-    """Write events as newline-delimited JSON; memoized per sf_dir.
+@fixture("events_json", scratch=True)
+def write_events_json(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Write events as newline-delimited JSON.
     Timestamps serialize as EPOCH MICROSECOND integers, not ISO text:
     text timestamps render through the writer session's timezone (a
     file written under one zone mis-parses under another), while the
     epoch int64 is the same bytes everywhere -- the standard contract
     for JSONL event feeds. Doubles serialize shortest-round-trip, so
     values survive the text format bit-exactly."""
-    if sf_dir not in _WRITTEN_JSON:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/events_json_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "events")
-            .select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
-                "props",
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .json(out)
+    (
+        load_table(spark, sf_dir, "events")
+        .select(
+            "event_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "user_id",
+            "event_type",
+            "value",
+            "props",
         )
-        _WRITTEN_JSON[sf_dir] = out
-    return _WRITTEN_JSON[sf_dir]
+        .repartition(4)
+        .write.mode("overwrite")
+        .json(out)
+    )
 
 
 def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,22 +148,17 @@ FROM events GROUP BY 1
 """
 
 
-def write_lineitem_orc(spark: SparkSession, sf_dir: str) -> str:
-    """Write lineitem as ORC; memoized per sf_dir. ORC keeps binary
+@fixture("lineitem_orc", scratch=True)
+def write_lineitem_orc(spark: SparkSession, sf_dir: str, out: str) -> str:
+    """Write lineitem as ORC. ORC keeps binary
     column encodings (no text round-trip), so this exercises the other
     mainstream columnar source with pushdown support."""
-    if sf_dir not in _WRITTEN_ORC:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_orc_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .repartition(4)
-            .write.mode("overwrite")
-            .orc(out)
-        )
-        _WRITTEN_ORC[sf_dir] = out
-    return _WRITTEN_ORC[sf_dir]
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .repartition(4)
+        .write.mode("overwrite")
+        .orc(out)
+    )
 
 
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,36 +185,29 @@ GROUP BY 1
 """
 
 
-_WRITTEN_CORRUPT: dict[str, str] = {}
-
 CORRUPT_MOD = 97  # rows with l_orderkey % 97 == 0 get a mangled quantity
 
 
-def write_corrupt_csv(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_corrupt", scratch=True)
+def write_corrupt_csv(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write a lineitem CSV with a deterministic slice of malformed rows
     (quantity = 'N/A' wherever ``l_orderkey % {CORRUPT_MOD} == 0``) --
-    the fixture for the malformed-row guard. Memoized per sf_dir."""
-    if sf_dir not in _WRITTEN_CORRUPT:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_corrupt_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                "l_orderkey",
-                "l_linenumber",
-                F.when(F.col("l_orderkey") % CORRUPT_MOD == 0, F.lit("N/A"))
-                .otherwise(F.col("l_quantity").cast("string"))
-                .alias("l_quantity"),
-                "l_returnflag",
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .csv(out)
+    the fixture for the malformed-row guard."""
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            F.when(F.col("l_orderkey") % CORRUPT_MOD == 0, F.lit("N/A"))
+            .otherwise(F.col("l_quantity").cast("string"))
+            .alias("l_quantity"),
+            "l_returnflag",
         )
-        _WRITTEN_CORRUPT[sf_dir] = out
-    return _WRITTEN_CORRUPT[sf_dir]
+        .repartition(4)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(out)
+    )
 
 
 def csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,46 +247,39 @@ FROM lineitem GROUP BY 1
 """
 
 
-_WRITTEN_XML: dict[str, str] = {}
-
 XML_SCHEMA = (
     "l_orderkey bigint, l_linenumber bigint, l_quantity double,"
     " l_extendedprice double, l_returnflag string, l_shipdate_s bigint"
 )
 
 
-def write_lineitem_xml(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_xml", scratch=True)
+def write_lineitem_xml(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write a lineitem projection as XML (Spark 4's NATIVE xml format --
-    the spark-xml package folded into the distribution); memoized per
-    sf_dir. Same text-serialization contract as the JSONL sink: the
+    the spark-xml package folded into the distribution). Same
+    text-serialization contract as the JSONL sink: the
     timestamp goes out as epoch-second integers (text timestamps render
     through the writer's session timezone; the epoch int is the same bytes
     everywhere), doubles serialize shortest-round-trip. A projection, not
     all 16 columns: XML carries per-FIELD tag overhead (~3x CSV bytes), so
     a real feed ships only the fields the consumer parses."""
-    if sf_dir not in _WRITTEN_XML:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_xml_{scratch_slug(sf_dir)}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                "l_orderkey",
-                "l_linenumber",
-                "l_quantity",
-                "l_extendedprice",
-                "l_returnflag",
-                F.unix_timestamp("l_shipdate").alias("l_shipdate_s"),
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rootTag", "lineitems")
-            .option("rowTag", "item")
-            .save(out)
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_quantity",
+            "l_extendedprice",
+            "l_returnflag",
+            F.unix_timestamp("l_shipdate").alias("l_shipdate_s"),
         )
-        _WRITTEN_XML[sf_dir] = out
-    return _WRITTEN_XML[sf_dir]
+        .repartition(4)
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "lineitems")
+        .option("rowTag", "item")
+        .save(out)
+    )
 
 
 def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,10 +316,8 @@ GROUP BY 1
 """
 
 
-_WRITTEN_NESTED: dict[str, str] = {}
-
-
-def write_lineitem_nested(spark: SparkSession, sf_dir: str) -> str:
+@fixture("lineitem_nested", scratch=True)
+def write_lineitem_nested(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Write lineitem as a NESTED parquet table: one row per order with
     an ``items array<struct<...>>`` column -- the event-log / document
     shape (order header + line array) that columnar formats store as
@@ -361,40 +326,34 @@ def write_lineitem_nested(spark: SparkSession, sf_dir: str) -> str:
     partition default demotes every large collect_* to sort-based
     aggregation -- the triangle_count lesson); sort_array on the
     linenumber-first struct makes the array order deterministic."""
-    if sf_dir not in _WRITTEN_NESTED:
-        from ..operators._util import scratch_root, scratch_slug
-
-        out = f"{scratch_root()}/lineitem_nested_{scratch_slug(sf_dir)}"
-        _FBT = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-        before = spark.conf.get(_FBT, None)
-        try:
-            spark.conf.set(_FBT, "1000000")
-            (
-                load_table(spark, sf_dir, "lineitem")
-                .groupBy("l_orderkey")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                "l_linenumber",
-                                "l_partkey",
-                                "l_returnflag",
-                                "l_quantity",
-                                "l_extendedprice",
-                            )
+    _FBT = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    before = spark.conf.get(_FBT, None)
+    try:
+        spark.conf.set(_FBT, "1000000")
+        (
+            load_table(spark, sf_dir, "lineitem")
+            .groupBy("l_orderkey")
+            .agg(
+                F.sort_array(
+                    F.collect_list(
+                        F.struct(
+                            "l_linenumber",
+                            "l_partkey",
+                            "l_returnflag",
+                            "l_quantity",
+                            "l_extendedprice",
                         )
-                    ).alias("items")
-                )
-                .write.mode("overwrite")
-                .parquet(out)
+                    )
+                ).alias("items")
             )
-        finally:
-            if before is None:
-                spark.conf.unset(_FBT)
-            else:
-                spark.conf.set(_FBT, before)
-        _WRITTEN_NESTED[sf_dir] = out
-    return _WRITTEN_NESTED[sf_dir]
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+    finally:
+        if before is None:
+            spark.conf.unset(_FBT)
+        else:
+            spark.conf.set(_FBT, before)
 
 
 def nested_lineitems_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,34 +454,29 @@ def register(reg: Registry) -> None:
 
 EVOLUT_CUT = "1997-01-01"  # generation boundary (order date)
 
-_EVOLVED: dict[str, str] = {}
 
-
-def write_orders_evolved(spark: SparkSession, sf_dir: str) -> str:
+@fixture("orders_evolved", scratch=True)
+def write_orders_evolved(spark: SparkSession, sf_dir: str, out: str) -> str:
     """Two file generations of the same table with DRIFTED schemas:
     generation 1 (orders before the cut) lacks the ``o_priority_rank``
     column that generation 2 carries -- the additive-column drift every
     long-lived ingest accumulates."""
-    if sf_dir not in _EVOLVED:
-        from ..operators._util import ntz_lit, scratch_root, scratch_slug
+    from ..operators._util import ntz_lit
 
-        out = f"{scratch_root()}/orders_evolved_{scratch_slug(sf_dir)}"
-        o = load_table(spark, sf_dir, "orders")
-        cut = ntz_lit(EVOLUT_CUT)
-        gen1 = o.where(F.col("o_orderdate") < cut).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-        )
-        gen2 = o.where(F.col("o_orderdate") >= cut).select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-            F.substring("o_orderpriority", 1, 1).cast("int").alias("o_priority_rank"),
-        )
-        gen1.write.mode("overwrite").parquet(f"{out}/gen=1")
-        gen2.write.mode("overwrite").parquet(f"{out}/gen=2")
-        _EVOLVED[sf_dir] = out
-    return _EVOLVED[sf_dir]
+    o = load_table(spark, sf_dir, "orders")
+    cut = ntz_lit(EVOLUT_CUT)
+    gen1 = o.where(F.col("o_orderdate") < cut).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
+    )
+    gen2 = o.where(F.col("o_orderdate") >= cut).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "o_orderdate",
+        F.substring("o_orderpriority", 1, 1).cast("int").alias("o_priority_rank"),
+    )
+    gen1.write.mode("overwrite").parquet(f"{out}/gen=1")
+    gen2.write.mode("overwrite").parquet(f"{out}/gen=2")
 
 
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
