@@ -20,8 +20,8 @@ Parquet-native:
   corpus size.
 - ``meta`` stores ``total_docs`` / ``avg_dl`` **as strings**, faithful to the
   reference's quirk (``load_index.py:101-111``), and ``search`` parses them
-  back like ``query.py:37-38`` — but keeps them in a 1-row DataFrame
-  (broadcast at join time) instead of driver-collected globals.
+  back driver-side like ``query.py:37-38`` and scores with them as SQL
+  literals.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from .functions.text import tokenize_query
 from .operators import index_build, search as search_ops
+from .operators._util import sql_in
 
 N_TERM_BUCKETS = 64
 
@@ -59,6 +60,9 @@ _LAYOUT_SCHEMAS = {
     "meta": "key STRING, value STRING",
     "forward": "doc_id STRING, term STRING, doc_bucket INT",
 }
+# Tombstones exist only between a delete and the next compaction: declared
+# and footer-checked like the layout tables, but never required.
+_OPTIONAL_SCHEMAS = {"tombstones": "doc_id STRING"}
 
 
 def _normalize_docs(docs: DataFrame) -> DataFrame:
@@ -684,6 +688,21 @@ def _read_meta_kv(spark: SparkSession, index_dir: str) -> dict[str, str | None]:
     return {r["key"]: r["value"] for r in rows}
 
 
+def _read_meta_retry(spark: SparkSession, index_dir: str) -> dict[str, str | None]:
+    """:func:`_read_meta_kv`, retried briefly while meta is missing (a
+    swap's delete->rename window)."""
+    import time as _time
+
+    for attempt in range(3):
+        try:
+            return _read_meta_kv(spark, index_dir)
+        except Exception as exc:  # noqa: BLE001 -- only missing-path retries
+            if attempt == 2 or not _is_missing_path_error(exc):
+                raise
+            _time.sleep(0.05)
+    raise AssertionError("unreachable")
+
+
 def _read_n_buckets(spark: SparkSession, index_dir: str) -> int:
     # fingerprint BEFORE the parquet read and stamp with that pre-read
     # value: if a rebuild lands between the two, the conservative stamp
@@ -710,10 +729,7 @@ def _read_n_buckets(spark: SparkSession, index_dir: str) -> int:
         # missing-path class is that benign race -- corruption (a
         # zero-row meta) or permission failures must propagate, never
         # be masked by a cached value recorded when meta was healthy.
-        transient = _is_missing_path_error(exc) or isinstance(
-            exc, (FileNotFoundError, NotADirectoryError)
-        )
-        if not transient:
+        if not _is_missing_path_error(exc):
             raise
         if cached is not None:
             return cached[0]
@@ -1315,22 +1331,16 @@ def _error_condition(exc: Exception) -> str:
 
 
 def _is_missing_path_error(exc: Exception) -> bool:
-    """True iff *exc* is Spark's missing-input-path failure (structured
-    error class when present, message substrings as the fallback)."""
+    """True iff *exc* is a missing-path failure: Spark's (structured
+    error class when present, message substrings as the fallback) or a
+    local filesystem one."""
+    if isinstance(exc, (FileNotFoundError, NotADirectoryError)):
+        return True
     cond = _error_condition(exc)
     if cond:
         return cond.startswith("PATH_NOT_FOUND")
     msg = str(exc)
     return "PATH_NOT_FOUND" in msg or "does not exist" in msg
-
-
-def _is_empty_dir_error(exc: Exception) -> bool:
-    """True iff *exc* is Spark's no-footers-to-infer-from failure (a
-    directory holding only ``_temporary`` mid-commit reads like this)."""
-    cond = _error_condition(exc)
-    if cond:
-        return cond.startswith("UNABLE_TO_INFER_SCHEMA")
-    return "UNABLE_TO_INFER_SCHEMA" in str(exc)
 
 
 def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -1351,38 +1361,45 @@ def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     - the FIRST delete's ``mode("append")`` is the only in-place write
       to a live table in the layout (every rewrite goes tmp+swap): a
       read inside its commit window sees a directory holding only
-      ``_temporary`` (no footers -> UNABLE_TO_INFER_SCHEMA). That state
-      resolves in milliseconds, so it retries briefly; pre-commit the
-      consistent answer is the old stats with no tombstones, post-commit
-      the retry reads the committed batch.
+      ``_temporary`` (no data files). That state resolves in
+      milliseconds, so it retries briefly; pre-commit the consistent
+      answer is the old stats with no tombstones, post-commit the retry
+      reads the committed batch.
 
-    A read failure that persists with the path still present (a
-    genuinely corrupt table) propagates as before."""
+    The schema is declared (no footer-inference job per call), so the
+    footer is checked once per index through :func:`_validate_layout`'s
+    memo: a foreign tombstones table would otherwise null-fill
+    ``doc_id`` and serve every deleted document. A read failure that
+    persists with the path still present (a genuinely corrupt table, or
+    one that stays file-less) propagates."""
     import time as _time
 
     path = f"{index_dir}/tombstones"
     if not _path_exists(spark, path):
         return None
+    _validate_layout(spark, index_dir, tuple(_OPTIONAL_SCHEMAS))
     for attempt in range(3):
         try:
-            return spark.read.parquet(path)
+            df = spark.read.schema(_OPTIONAL_SCHEMAS["tombstones"]).parquet(path)
         except Exception as exc:  # noqa: BLE001 -- see re-checks below
-            if _is_missing_path_error(exc):
-                if not _path_exists(spark, path):
-                    # confirmed gone again: compaction's strictly-last
-                    # clear already purged the dead postings
-                    return None
-                # the path REAPPEARED (compaction cleared it, then a new
-                # delete re-created it): the now-present table is the
-                # correct answer, so retry the read instead of raising
-                if attempt < 2:
-                    _time.sleep(0.05)
-                    continue
+            if not _is_missing_path_error(exc):
                 raise
-            if _is_empty_dir_error(exc) and attempt < 2:
+            if not _path_exists(spark, path):
+                # confirmed gone again: compaction's strictly-last
+                # clear already purged the dead postings
+                return None
+            # the path REAPPEARED (compaction cleared it, then a new
+            # delete re-created it): the now-present table is the
+            # correct answer, so retry the read instead of raising
+            if attempt < 2:
                 _time.sleep(0.05)
                 continue
             raise
+        if _n_input_files(df):
+            return df
+        if attempt == 2:
+            raise _no_data_files(path)
+        _time.sleep(0.05)
     raise AssertionError("unreachable")
 
 
@@ -1431,6 +1448,7 @@ def _read_table_retry(
     path: str,
     schema: str | None = None,
     allow_fileless: bool | Callable[[], bool] = False,
+    partitions: list[str] | None = None,
 ) -> DataFrame:
     """spark.read.parquet with a short bounded retry on a MISSING path:
     a reader that plans a scan inside a live swap's delete->rename window
@@ -1458,13 +1476,21 @@ def _read_table_retry(
     (compaction of an emptied index's partitioned tables); a CALLABLE
     is evaluated lazily, only after a zero-file table is actually met,
     so callers whose opt-out decision itself costs a read (compact's
-    meta check) never pay it on the all-files-present path."""
+    meta check) never pay it on the all-files-present path.
+
+    *partitions* (``col=value`` subdirectory names) reads only those of
+    them that exist, with ``basePath`` so the partition column stays a
+    column; the existing set is re-checked on every attempt."""
     import time as _time
 
     for attempt in range(3):
         try:
             reader = spark.read.schema(schema) if schema else spark.read
-            df = reader.parquet(path)
+            if partitions is None:
+                df = reader.parquet(path)
+            else:
+                dirs = _existing_subdirs(spark, path, partitions)
+                df = reader.option("basePath", path).parquet(*dirs)
         except Exception as exc:  # noqa: BLE001 -- AnalysisException
             if not _is_missing_path_error(exc):
                 raise
@@ -1478,18 +1504,41 @@ def _read_table_retry(
         if callable(allow_fileless) and allow_fileless():
             return df
         if attempt == 2:
-            raise RuntimeError(
-                f"{path} exists but contains no data files -- a concurrent "
-                "build_index() overwrite in progress (re-run after it "
-                "completes), a torn rebuild, a never-built table, or an "
-                "index whose every document was deleted and compacted away "
-                "(append documents or rebuild). Schema inference raised "
-                "UNABLE_TO_INFER_SCHEMA in all of these states; the "
-                "declared layout schema would otherwise read them as "
-                "silently EMPTY"
-            )
+            raise _no_data_files(path)
         _time.sleep(0.05)
     raise AssertionError("unreachable")
+
+
+def _existing_subdirs(spark: SparkSession, path: str, names: list[str]) -> list[str]:
+    """The ``path/name`` dirs that exist: one ``isdir`` per name locally,
+    one ``globStatus`` elsewhere. A missing *path* raises, so a reader
+    retries it as a missing table."""
+    if _is_local_path(spark, path):
+        local = _strip_file_scheme(path)
+        if not os.path.isdir(local):
+            raise FileNotFoundError(f"Path does not exist: {path}")
+        return [f"{path}/{n}" for n in names if os.path.isdir(f"{local}/{n}")]
+    found = {
+        st.getPath().getName()
+        for st in (_glob_status(spark, f"{path}/{{{','.join(names)}}}") if names else [])
+        if st.isDirectory()
+    }
+    if not found and not _path_exists(spark, path):
+        raise FileNotFoundError(f"Path does not exist: {path}")
+    return [f"{path}/{n}" for n in names if n in found]
+
+
+def _no_data_files(path: str) -> RuntimeError:
+    return RuntimeError(
+        f"{path} exists but contains no data files -- a concurrent "
+        "build_index() overwrite in progress (re-run after it "
+        "completes), a torn rebuild, a never-built table, or an "
+        "index whose every document was deleted and compacted away "
+        "(append documents or rebuild). Schema inference raised "
+        "UNABLE_TO_INFER_SCHEMA in all of these states; the "
+        "declared layout schema would otherwise read them as "
+        "silently EMPTY"
+    )
 
 
 def _n_input_files(df: DataFrame) -> int:
@@ -1561,12 +1610,14 @@ def _arrow_type(ddl_type: str) -> str:
 
 def _expected_footer(table: str) -> dict[str, str]:
     """The pyarrow footer schema a conforming *table* data file carries,
-    derived from :data:`_LAYOUT_SCHEMAS` (single source of truth -- a
-    layout change updating one side cannot drift from the other) minus
-    the partition column, which lives in the directory name."""
+    derived from :data:`_LAYOUT_SCHEMAS` / :data:`_OPTIONAL_SCHEMAS`
+    (single source of truth -- a layout change updating one side cannot
+    drift from the other) minus the partition column, which lives in the
+    directory name."""
     part = _LAYOUT_PARTITION.get(table)
     want: dict[str, str] = {}
-    for field in _split_top_level(_LAYOUT_SCHEMAS[table]):
+    schema = _LAYOUT_SCHEMAS.get(table) or _OPTIONAL_SCHEMAS[table]
+    for field in _split_top_level(schema):
         name, ddl = field.split(None, 1)
         if name != part:
             want[name] = _arrow_type(ddl)
@@ -1577,12 +1628,29 @@ def _expected_footer(table: str) -> dict[str, str]:
 # map to an arrow name HERE, at import -- a future layout column using an
 # unmapped type would otherwise raise inside _validate_layout on the
 # search hot path.
-for _layout_table in _LAYOUT_SCHEMAS:
+for _layout_table in (*_LAYOUT_SCHEMAS, *_OPTIONAL_SCHEMAS):
     _expected_footer(_layout_table)
 del _layout_table
 
 
-def _validate_layout(spark: SparkSession, index_dir: str) -> None:
+def _data_file_pattern(base: str, table: str) -> str:
+    """Glob matching *table*'s data files under the index dir *base*."""
+    part = _LAYOUT_PARTITION.get(table)
+    return f"{base}/{table}/{part}=*/*.parquet" if part else f"{base}/{table}/*.parquet"
+
+
+def _has_data_files(spark: SparkSession, index_dir: str, table: str) -> bool:
+    """Whether *table* holds any data file: a first-match glob locally,
+    one ``globStatus`` elsewhere."""
+    if _is_local_path(spark, index_dir):
+        pattern = _data_file_pattern(_strip_file_scheme(index_dir), table)
+        return next(glob.iglob(pattern), None) is not None
+    return bool(_glob_status(spark, _data_file_pattern(index_dir, table)))
+
+
+def _validate_layout(
+    spark: SparkSession, index_dir: str, tables: tuple[str, ...] = tuple(_LAYOUT_SCHEMAS)
+) -> None:
     """Fail fast on a FOREIGN directory: declared read schemas null-fill
     columns the files lack instead of erroring, so a dir whose tables
     were written by something else (the CLI reuses any existing on-disk
@@ -1602,22 +1670,22 @@ def _validate_layout(spark: SparkSession, index_dir: str) -> None:
     would re-glob every bucket directory on every search of an index
     permanently missing one table (a searchable pre-forward legacy
     index); the read path reports the file-less state loudly itself
-    (see :func:`_read_table_retry`)."""
+    (see :func:`_read_table_retry`).
+
+    *tables* defaults to every layout table; :func:`_tombstones` checks
+    the optional tombstones table through the same memo."""
     done = _LAYOUT_VALIDATED.setdefault(index_dir, set())
-    if len(done) == len(_LAYOUT_SCHEMAS):
+    if done.issuperset(tables):
         return
     if not _is_local_path(spark, index_dir):
         return
     import pyarrow.parquet as pq
 
     base = _strip_file_scheme(index_dir)
-    for table in _LAYOUT_SCHEMAS:
+    for table in tables:
         if table in done:
             continue
-        part = _LAYOUT_PARTITION.get(table)
-        pattern = (
-            f"{base}/{table}/{part}=*/*.parquet" if part else f"{base}/{table}/*.parquet"
-        )
+        pattern = _data_file_pattern(base, table)
         try:
             # first match only -- any conforming data file proves the
             # layout, and a full sorted listing of every bucket file
@@ -1678,15 +1746,7 @@ def _assert_untorn_for_append(spark: SparkSession, index_dir: str) -> None:
     Remote paths skip, same single-writer rationale as _validate_layout."""
     if not _is_local_path(spark, index_dir):
         return
-    base = _strip_file_scheme(index_dir)
-    missing = []
-    for table in _LAYOUT_SCHEMAS:
-        part = _LAYOUT_PARTITION.get(table)
-        pattern = (
-            f"{base}/{table}/{part}=*/*.parquet" if part else f"{base}/{table}/*.parquet"
-        )
-        if next(glob.iglob(pattern), None) is None:
-            missing.append(table)
+    missing = [t for t in _LAYOUT_SCHEMAS if not _has_data_files(spark, index_dir, t)]
     if not missing:
         return
     if all(t in _LAYOUT_PARTITION for t in missing):
@@ -1727,8 +1787,16 @@ def search(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k over the **persisted** index (reference ``query.py``
-    lifecycle, SURVEY.md section 3.2): bucket-pruned postings scan, broadcast
-    vocab, meta-derived stats, one job.
+    lifecycle, SURVEY.md section 3.2).
+
+    Building the DataFrame runs no Spark job on a local index: the corpus
+    stats and bucket count come from one driver-side ``meta`` read and
+    score as literals; the postings are read from only the query's
+    existing ``term_bucket=`` directories (listing all of them would be a
+    parallel-discovery job); every table has a declared schema. Running
+    it takes one job per broadcast (vocab, doc_stats, and the tombstones
+    after a delete) plus the scoring job, which adaptive execution splits
+    at its one shuffle: at most 4 jobs, 5 with tombstones.
 
     ``n_buckets`` defaults to the value persisted in the index's meta
     table at build time (passing a different one would prune to the wrong
@@ -1741,17 +1809,34 @@ def search(
     with the facet). A facet set is metadata-sized, hence broadcast; at
     100 TB one would persist hot facet columns into doc_stats instead
     (same plan shape, no extra shuffle)."""
-    idx = load_index(spark, index_dir)
+    _heal_torn_swaps(spark, index_dir)
+    _validate_layout(spark, index_dir)
+    meta = _read_meta_retry(spark, index_dir)
+    try:
+        # meta strings -> numbers, as query.py:37-38 does with float()
+        stats = (int(meta["total_docs"]), float(meta["avg_dl"]))
+    except (KeyError, TypeError, ValueError) as exc:
+        raise RuntimeError(
+            f"{index_dir}/meta has no numeric total_docs/avg_dl -- corrupt "
+            "or foreign meta table; rebuild with build_index()"
+        ) from exc
     if n_buckets is None:
-        # memoized + listing-validated: no per-search metadata job
-        n_buckets = _read_n_buckets(spark, index_dir)
-    terms = tokenize_query(query)
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    postings = idx.inverted_index.where(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-    ).drop("term_bucket")
-    # tombstone mask AFTER bucket+term pruning: the anti join runs over
-    # only the query's postings, broadcast against the (tiny) delete set.
+        n_buckets = int(meta.get("n_buckets") or N_TERM_BUCKETS)
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in tokenize_query(query)})
+    postings = _read_table_retry(
+        spark,
+        f"{index_dir}/inverted_index",
+        _LAYOUT_SCHEMAS["inverted_index"],
+        # zero files in the query's buckets is an empty answer only while
+        # the table has data files elsewhere
+        allow_fileless=lambda: _has_data_files(spark, index_dir, "inverted_index"),
+        partitions=[f"term_bucket={b}" for b in buckets],
+    )
+    # the partition filter is implied by the paths read; it stays in the
+    # plan as the pruning contract
+    postings = postings.where(sql_in("term_bucket", buckets)).drop("term_bucket")
+    # tombstone mask AFTER bucket pruning: the anti join runs over only
+    # the query's postings, broadcast against the (tiny) delete set.
     # vocab/meta were corrected at delete time, so masking the postings
     # is the only search-side change deletes need.
     tomb = _tombstones(spark, index_dir)
@@ -1761,20 +1846,11 @@ def search(
         postings = postings.join(
             F.broadcast(allowed.select("doc_id")), "doc_id", "left_semi"
         )
-    # meta strings -> numbers, as query.py:37-38 does with float();
-    # stays a 1-row DataFrame that broadcasts into the scoring join.
-    # cast INSIDE the max: exactly one non-null value exists per key, so
-    # numeric max == the value, and a numeric aggregation buffer keeps
-    # even this 4-row aggregate a HashAggregate (string buffers are not
-    # UnsafeRow-mutable and demote to SortAggregate)
-    stats = idx.meta.agg(
-        F.max(
-            F.when(F.col("key") == "total_docs", F.col("value").cast("long"))
-        ).alias("n_docs"),
-        F.max(
-            F.when(F.col("key") == "avg_dl", F.col("value").cast("double"))
-        ).alias("avg_dl"),
-    )
     return search_ops.bm25_rank_with_stats(
-        postings, idx.vocab, idx.doc_stats, stats, query, k
+        postings,
+        _read_table_retry(spark, f"{index_dir}/vocab", _LAYOUT_SCHEMAS["vocab"]),
+        _read_table_retry(spark, f"{index_dir}/doc_stats", _LAYOUT_SCHEMAS["doc_stats"]),
+        stats,
+        query,
+        k,
     )

@@ -29,6 +29,18 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
+def sql_in(col: str, values) -> str:
+    """``col IN (...)`` as Spark SQL text over int or string literals;
+    ``false`` for no values, where ``IN ()`` would not parse."""
+    items = ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, str)
+        else str(int(v))
+        for v in values
+    )
+    return f"{col} IN ({items})" if items else "false"
+
+
 def davg(expr: Column, scale: int = 6) -> Column:
     """Deterministic average: exact decimal sum, double division by count."""
     return dsum(expr, scale) / F.count(F.lit(1))

@@ -5,12 +5,15 @@ Reference lifecycle (SURVEY.md section 3.2): scan 4 Cassandra tables with
 ``isin(query_terms)`` pushdown -> inner join doc_stats -> RDD lambda
 computes per-(term,doc) BM25 -> reduceByKey sum -> ``takeOrdered(10)``.
 
-Here the whole thing is one job: the postings/vocab IN-filters prune at
-the parquet scan, vocab + the 1-row corpus-stats frame join in as
-broadcasts, scoring is Column arithmetic inside whole-stage codegen, the
-per-doc sum is a two-phase hash aggregate, and the top-k plans as
-TakeOrderedAndProject (per-partition heaps -- no global sort). No Python
-executes per row anywhere.
+Here it is one plan: the postings/vocab IN-filters prune at the parquet
+scan, vocab and doc_stats join in as broadcasts (and the 1-row
+corpus-stats frame, unless the stats come in as literals), scoring is
+one SQL expression inside whole-stage codegen, the per-doc sum is a
+two-phase hash aggregate with the title as a grouping key, and the top-k
+plans as TakeOrderedAndProject (per-partition heaps -- no global sort).
+Executing it runs one job per broadcast plus the scoring job, which
+adaptive execution splits at the aggregate's shuffle. No Python executes
+per row anywhere.
 
 Determinism beyond the reference: scores rounded to 6 decimals and ties
 broken by ``doc_id`` ascending (the reference's ``takeOrdered`` tie order
@@ -19,7 +22,7 @@ is partition-dependent -- SURVEY.md section 4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import fixture
@@ -27,7 +30,7 @@ from ..functions import bm25
 from ..functions.text import tokenize_query
 from ..registry import Registry
 from . import index_build
-from ._util import dsum, sql_dsum
+from ._util import sql_dsum, sql_in
 
 DEFAULT_QUERY = "spark query window merge zzz"  # 'zzz' exercises the df=0 drop
 DEFAULT_K = 10
@@ -53,55 +56,50 @@ def bm25_rank_with_stats(
     inverted: DataFrame,
     vocab: DataFrame,
     doc_stats: DataFrame,
-    stats: DataFrame,
+    stats: DataFrame | tuple[int, float],
     query: str = DEFAULT_QUERY,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """As :func:`bm25_rank` but with the 1-row ``(n_docs, avg_dl)`` stats
-    frame supplied (e.g. parsed from a persisted ``meta`` table -- the
-    reference's ``query.py:32-38`` path)."""
-    terms = tokenize_query(query)
-    postings = inverted.where(F.col("term").isin(terms))
-    vocab_q = vocab.where(F.col("term").isin(terms))
+    """As :func:`bm25_rank` with the corpus stats supplied: a 1-row
+    ``(n_docs, avg_dl)`` frame (broadcast into the scoring join), or the
+    two numbers themselves, which score as literals with no join (a
+    persisted index's ``meta``, the reference's ``query.py:32-38`` path)."""
+    in_terms = sql_in("term", tokenize_query(query))
     scored = (
-        postings.join(F.broadcast(vocab_q), "term")
-        .join(doc_stats.select("doc_id", "length"), "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            bm25.score(
-                F.col("tf"),
-                F.col("length"),
-                F.col("avg_dl"),
-                F.col("n_docs"),
-                F.col("doc_freq"),
-            ).alias("partial"),
-        )
+        inverted.where(in_terms)
+        .join(F.broadcast(vocab.where(in_terms)), "term")
+        .join(doc_stats.select("doc_id", "length", "title"), "doc_id")
     )
-    # The per-doc sum aggregates ONLY (doc_id, double): a string in the
-    # aggregation buffer (the old max(title)) is not UnsafeRow-mutable and
-    # silently demoted the whole corpus-sized aggregate to SortAggregate
-    # (sort per partition); numeric-only buffers keep it a two-phase
-    # HashAggregate. Titles attach AFTER the top-k, a k-row broadcast
-    # join -- which also matches the reference more closely than the old
-    # max(title) (titles are functionally dependent on doc_id).
-    # dsum(9): per-term contributions accumulate as exact DECIMAL(18,9)
-    # -- a plain double sum is partition-order-dependent, and a doc whose
-    # unrounded score sits within an ulp of a 0.5e-6 rounding boundary
-    # could round differently across engines/runs; the 1e-9 quantization
-    # is absorbed by the final round-to-6 (repo-wide dsum convention)
-    ranked = (
-        scored.groupBy("doc_id")
-        .agg(F.round(dsum(F.col("partial"), 9), 6).alias("score"))
+    if isinstance(stats, DataFrame):
+        scored = scored.crossJoin(F.broadcast(stats))
+        n_docs, avg_dl = "n_docs", "avg_dl"
+    else:
+        n_docs, avg_dl = str(stats[0]), bm25.double_literal(stats[1])
+    partial = bm25.score("tf", "length", avg_dl, n_docs, "doc_freq")
+    # Titles ride the aggregate as a grouping KEY (functionally dependent
+    # on doc_id): a string in the aggregation BUFFER (max(title)) is not
+    # UnsafeRow-mutable and demotes the corpus-sized aggregate to
+    # SortAggregate, while string keys keep it a two-phase HashAggregate.
+    # The top-k rows then carry their titles, so ranking is a window over
+    # TakeOrderedAndProject's single output partition -- no second
+    # doc_stats scan and no extra exchange.
+    # sql_dsum(9): per-term contributions accumulate as exact
+    # DECIMAL(18,9) -- a plain double sum is partition-order-dependent,
+    # and a doc whose unrounded score sits within an ulp of a 0.5e-6
+    # rounding boundary could round differently across engines/runs; the
+    # 1e-9 quantization is absorbed by the final round-to-6 (repo-wide
+    # dsum convention)
+    return (
+        scored.groupBy("doc_id", "title")
+        .agg(F.expr(f"round({sql_dsum(partial, 9)}, 6)").alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
-    )
-    titled = F.broadcast(ranked).join(
-        doc_stats.select("doc_id", "title"), "doc_id"
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return titled.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "doc_id", "title", "score"
+        .selectExpr(
+            "row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank",
+            "doc_id",
+            "title",
+            "score",
+        )
     )
 
 
@@ -407,7 +405,7 @@ def bm25_search_filtered_persisted(
     a broadcast while idf/avg_dl stay corpus-global -- the persisted twin
     of ``bm25_search_filtered``, sharing its oracle. This is the shape a
     deployed faceted search runs: index on disk, facet from the metadata
-    table, one job."""
+    table, one more broadcast."""
     from .. import engine
     from ..sources.catalog import load_table
 

@@ -1080,17 +1080,18 @@ def test_error_classification_prefers_structured_condition():
             return None
 
         def getErrorClass(self):
-            return "UNABLE_TO_INFER_SCHEMA"
+            return "PATH_NOT_FOUND"
 
     # structured class decides, regardless of message wording
     assert engine._is_missing_path_error(CondErr("totally reworded"))
     assert not engine._is_missing_path_error(OtherCondErr("does not exist"))
     # older API fallback
-    assert engine._is_empty_dir_error(LegacyErr("reworded too"))
+    assert engine._is_missing_path_error(LegacyErr("reworded too"))
     # no structured class at all -> substring fallback
     assert engine._is_missing_path_error(Exception("Path does not exist: /x"))
-    assert engine._is_empty_dir_error(Exception("[UNABLE_TO_INFER_SCHEMA] x"))
     assert not engine._is_missing_path_error(Exception("quota exceeded"))
+    # a local filesystem miss (the pyarrow meta read) counts too
+    assert engine._is_missing_path_error(FileNotFoundError("x"))
 
 
 def test_meta_fingerprint_propagates_persistent_errors(spark, tmp_path, monkeypatch):
@@ -1139,6 +1140,20 @@ def test_load_index_rejects_foreign_dir(spark, tmp_path):
     ).write.parquet(f"{d2}/doc_stats")
     with pytest.raises(ValueError, match="rebuild"):
         engine._validate_layout(spark, d2)
+
+
+def test_search_rejects_foreign_tombstones(spark, sf_dir, tmp_path):
+    """Tombstones are read under a declared ``doc_id STRING`` schema, which
+    would null-fill a foreign table's missing column and mask nothing --
+    serving every deleted document. Their footer is checked instead, and
+    the search fails naming the table."""
+    d = str(tmp_path / "idx")
+    engine.build_index(
+        index_build.documents_with_title(spark, sf_dir).limit(20), d, n_buckets=8
+    )
+    spark.range(3).write.parquet(f"{d}/tombstones")  # an `id` column
+    with pytest.raises(ValueError, match="tombstones"):
+        engine.search(spark, d, search_ops.DEFAULT_QUERY)
 
 
 def test_dir_signature_distinguishes_gone_from_denied():

@@ -4,6 +4,10 @@ TakeOrderedAndProject, no cartesian blowups)."""
 
 from __future__ import annotations
 
+import glob
+import os
+from urllib.parse import urlparse
+
 import pytest
 
 from big_data_assignment2_spark.plans.audit import audit, explain_formatted, operators, pushed_filters
@@ -108,6 +112,73 @@ def test_persisted_search_prunes_buckets(spark, sf_dir, tmp_path):
     df = engine.search(spark, d, "data model")
     # partition-column filter present => bucket directories pruned
     assert not audit(df, requires=("term_bucket",))
+    # ... and the postings scan reads exactly the files of the query's
+    # bucket directories, nothing else of the table
+    buckets = {engine.term_bucket_py(t, 8) for t in ("data", "model")}
+    want = {
+        os.path.realpath(p)
+        for b in buckets
+        for p in glob.glob(f"{d}/inverted_index/term_bucket={b}/*.parquet")
+    }
+    got = {
+        os.path.realpath(urlparse(f).path)
+        for f in df.inputFiles()
+        if "/inverted_index/" in f
+    }
+    assert want and got == want
+
+
+def _jobs(spark, group: str, fn):
+    """(result of *fn*, ids of the Spark jobs it ran), via statusTracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_persisted_search_job_counts(spark, sf_dir, tmp_path):
+    """A warm persisted search builds its DataFrame without any Spark job
+    (stats from meta as literals, pruned bucket listing, declared
+    schemas) and executes in at most 4 jobs -- one per broadcast (vocab,
+    doc_stats) plus the scoring job split at its shuffle -- or 5 once
+    tombstones add their broadcast. The plan shape behind those counts
+    is pinned too."""
+    from big_data_assignment2_spark import engine
+    from big_data_assignment2_spark.operators import index_build
+
+    d = str(tmp_path / "idx")
+    docs = index_build.documents_with_title(spark, sf_dir)
+    # one wide-vocabulary doc fills every bucket: listing the whole table
+    # (64 dirs, over Spark's 32-path parallel-discovery threshold) would
+    # itself be a job
+    wide = spark.createDataFrame(
+        [("1000001", "doc_1000001", " ".join(f"w{i}" for i in range(400)))],
+        "doc_id string, title string, text string",
+    )
+    engine.build_index(docs.unionByName(wide), d, n_buckets=64)
+    assert len(glob.glob(f"{d}/inverted_index/term_bucket=*")) == 64
+    q = "spark query window merge"
+    for state, limit in (("live", 4), ("tombstoned", 5)):
+        if state == "tombstoned":
+            engine.delete_from_index(
+                docs.where("CAST(doc_id AS BIGINT) % 7 = 0").select("doc_id"), d
+            )
+        engine.search(spark, d, q).collect()  # warm
+        df, define_jobs = _jobs(spark, f"define-{state}", lambda: engine.search(spark, d, q))
+        # one exchange (the aggregate's shuffle) and no join for the
+        # stats; titles come out of the aggregate, so the window ranks
+        # TakeOrderedAndProject's rows with no exchange or sort of its own
+        ops = operators(df)
+        assert ops.count("Exchange") == 1, ops
+        assert not {"Sort", "SortAggregate", "BroadcastNestedLoopJoin"} & set(ops), ops
+        assert ops[ops.index("TakeOrderedAndProject") + 1] == "Window", ops
+        rows, run_jobs = _jobs(spark, f"collect-{state}", df.collect)
+        assert rows
+        assert define_jobs == [], (state, define_jobs)
+        assert 1 <= len(run_jobs) <= limit, (state, run_jobs)
 
 
 @pytest.mark.parametrize(
